@@ -149,7 +149,9 @@ object KernelExprs {
     * bytes + 0x20 separators), which equals the UTF-8 encoding of the
     * space-joined String for any valid-UTF-8 tokens — the udf form paid
     * UTF8String→String per token, a UTF-16 StringBuilder, and a final
-    * String→UTF8String re-encode per document. */
+    * String→UTF8String re-encode per document. A null element in `starts`
+    * or a kept text past `Int.MaxValue` bytes throws instead of cutting
+    * the wrong tokens or wrapping the byte count. */
   def spanCut(toks: ArrayData, starts: ArrayData, n: Int): InternalRow = {
     if (toks == null) return null
     val T = toks.numElements()
@@ -158,7 +160,14 @@ object KernelExprs {
     if (starts == null || starts.numElements() == 0) {
       while (kept < T) { keptIdx(kept) = kept; kept += 1 }
     } else {
-      val s = starts.toIntArray()
+      val s = new Array[Int](starts.numElements())
+      var q = 0
+      while (q < s.length) {
+        if (starts.isNullAt(q))
+          throw new IllegalArgumentException(s"graft_span_cut: null element at starts[$q]")
+        s(q) = starts.getInt(q)
+        q += 1
+      }
       var cursor = 0
       var i = 0
       while (i < s.length) {
@@ -172,10 +181,13 @@ object KernelExprs {
       var p = cursor // tail after the last run
       while (p < T) { keptIdx(kept) = p; kept += 1; p += 1 }
     }
-    var total = if (kept > 1) kept - 1 else 0 // the single-space separators
+    var total = if (kept > 1) kept - 1L else 0L // the single-space separators
     var k = 0
     while (k < kept) { total += toks.getUTF8String(keptIdx(k)).numBytes(); k += 1 }
-    val bytes = new Array[Byte](total)
+    if (total > Int.MaxValue)
+      throw new IllegalArgumentException(
+        s"graft_span_cut: kept text is $total bytes, past the ${Int.MaxValue}-byte string limit")
+    val bytes = new Array[Byte](total.toInt)
     var off = org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET.toLong
     k = 0
     while (k < kept) {

@@ -149,23 +149,15 @@ object Dedup {
   private[graft] var gramPruneMinRows: Long = 16000000L
   private[graft] var bandPruneMinRows: Long = 8000000L
 
-  /** A/B toggle for the r11 `pinnedBandedLeft` persist in
-    * [[minhashPairsFromSignatures]]'s bounded-left + materialize form
-    * (tools.IngestAbProbe) — the persist trades a second banding-explode
-    * recompute for block-cache writes, and the r11→r12 driver-extras
-    * drift on incrDedup sat on exactly this code. Production never
-    * writes it. */
-  private[graft] var pinBandedLeftEnabled: Boolean = true
-
   /** Arming threshold for [[ingestStep]]'s exact-tier batch bloom, in
     * TOTAL ON-DISK BYTES of the store's batch dirs (a free FileSystem
     * listing — no scan). The bloom bounds the hash anti-join's exchange by
     * the batch instead of the store, but costs two extra per-batch driver
     * actions (pin-count + bloom aggregation, ~0.7-1.0 s of job-scheduling
-    * barriers at any batch size): bench_stream r11 measured the armed form
-    * at a 6M-doc/2.4 GB store trading 33% LESS CPU (857→573 s) for 46%
-    * MORE wall (64→93 s) — the exchange it prunes (~230 MB) costs less
-    * than the actions at this size. 8 GB ≈ 20M docs of web text, where the
+    * barriers at any batch size): an r11 streaming-ingest run measured the
+    * armed form at a 6M-doc/2.4 GB store trading 33% LESS CPU (857→573 s)
+    * for 46% MORE wall (64→93 s) — the exchange it prunes (~230 MB) costs
+    * less than the actions at this size. 8 GB ≈ 20M docs of web text, where the
     * pruned exchange (~1 GB/batch and growing) clearly out-costs two fixed
     * actions; below it the anti-join runs direct (still against the narrow
     * hash sidecar — the sidecar always pays, it replaces a full text
@@ -201,8 +193,8 @@ object Dedup {
     * `targetRowsPerBucket` under ~64k band rows (~1 MB of ~14 B-on-disk
     * rows per bucket), capped at 8192 (an IN-list and footer-stat count a
     * probe's planner handles comfortably). The target is MEASURED, not
-    * derived (tools/BucketProbe, r13): point-probe latency is FLAT in
-    * bucket count at small indexes (50k-800k docs / 10-172 MB: medians
+    * derived (an r13 bucket-count sweep, README): point-probe latency is
+    * FLAT in bucket count at small indexes (50k-800k docs / 10-172 MB: medians
     * within noise across 16→1024 buckets — fixed job costs dominate), and
     * at 3M docs / 649 MB the 1024-bucket layout beats 64 by 21% median
     * and 3× at max (2.128 s med / 2.998 max vs 2.687 / 8.854) — more
@@ -427,29 +419,6 @@ object Dedup {
     * results with the In predicate in the scan. Production never writes. */
   private[graft] var verifyRangeTightCover: Double = 100000.0
 
-  /** A/B toggle for the InSet arm — `false` reproduces the r13 behavior
-    * exactly (ranges or nothing), the control arm of
-    * [[tools.UniformVerifyProbe]]'s store-growth measurement. Production
-    * never writes it. */
-  private[graft] var verifyInSetEnabled: Boolean = true
-
-  /** EXPERIMENT arm for the past-`maxInIds` regime (262k–few-M candidate
-    * ids, where no plan predicate is pushed and the fetch reads the full
-    * matched dirs): when true, that regime semi-joins the resolved
-    * matched-dir frame against the pinned candidate-id frame before the
-    * verify join — reader-side exclusion without a plan literal, the
-    * alternative [[tools.PastCapProbe]] measures against the full fetch
-    * and an uncapped InSet. Production never writes it; it is wired as a
-    * default only if the probe shows the regime beats the O(candidates)
-    * verify noise. */
-  private[graft] var verifySemiJoinPastCap: Boolean = false
-
-  /** Probe-only override of [[VerifyPrune.maxInIds]] on the ingest path —
-    * lets [[tools.PastCapProbe]] drive the InSet arm PAST its 262144
-    * plan-size cap to price what the cap is protecting against.
-    * Production never writes it. */
-  private[graft] var verifyMaxInIdsOverride: Option[Int] = None
-
   private[graft] def chooseIdPredicate(sorted: Array[Long], maxRanges: Int,
                                        maxInIds: Int): Option[IdPredicate] =
     if (sorted.isEmpty) None
@@ -466,7 +435,7 @@ object Dedup {
       // tight in absolute terms or relative to the candidates' own span
       if (covered <= verifyRangeTightCover || covered / span <= 0.5)
         Some(IdPredicate.Ranges(rs))
-      else if (verifyInSetEnabled && sorted.length <= maxInIds)
+      else if (sorted.length <= maxInIds)
         Some(IdPredicate.InSet(scala.collection.immutable.ArraySeq.unsafeWrapArray(sorted)))
       else None
     }
@@ -770,7 +739,7 @@ object Dedup {
           // recompute source — a per-batch persist would pay cache writes
           // it never collects on.
           val pinned =
-            if (materializeCandidates && pinBandedLeftEnabled) {
+            if (materializeCandidates) {
               val p = bandedLeftRaw.persist(
                 org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
               pinnedBandedLeft = Some(p)
@@ -867,17 +836,7 @@ object Dedup {
                 }
                 chosen
               }
-            val fetched = vp.resolve(tags, pred)
-            // past-cap experiment arm (see [[verifySemiJoinPastCap]]):
-            // reader-side exclusion by semi-join when no plan predicate
-            // was pushed — answers unchanged (the verify join filters to
-            // the same candidate ids anyway)
-            if (pred.isEmpty && verifySemiJoinPastCap) {
-              phaseHook.foreach(h => h("cand_semijoin", 1.0))
-              fetched.join(
-                pinnedCand.select(col(rightName).as("doc_id")).distinct(),
-                Seq("doc_id"), "left_semi")
-            } else fetched
+            vp.resolve(tags, pred)
           }
         // broadcast the candidate side EXPLICITLY while it is provably
         // bounded (maxBroadcastPairs ≈ 64 MB of pairs): the pinned frame
@@ -2192,7 +2151,7 @@ object Dedup {
     * band+verify / store writes), FORCING a materialization barrier between
     * phases so the numbers attribute honestly — the production path
     * (`None`) keeps its lazy fusion and pays only an Option check.
-    * Feeds the streamCuratedNear per-batch cost breakdown
+    * Feeds the curated near-ingest per-batch cost breakdown
     * (tools.StreamNearProfile). */
   private[graft] var phaseHook: Option[(String, Double) => Unit] = None
 
@@ -2316,7 +2275,7 @@ object Dedup {
 
     // exact tier: in-batch dedup, then null-safe content-hash anti-join
     // against the store's content hashes. Two O(store)-per-batch costs are
-    // bounded here (r11 streamCuratedNear profiling), both ADAPTIVE on the
+    // bounded here (r11 curated near-ingest profiling), both ADAPTIVE on the
     // same gate — total store bytes ≥ [[exactBloomMinStoreBytes]], a free
     // FileSystem listing:
     //  - SCAN: once armed, each ingested batch dir gets a narrow
@@ -2337,8 +2296,8 @@ object Dedup {
     //    preserving the <=> null-equals-null semantics.
     // Below the gate neither pays: the bloom needs two extra per-batch
     // driver actions (pin-count + bloom agg) and the sidecar a write +
-    // readback (~0.7 s/batch of job barriers) — bench_stream r11 measured
-    // the unconditional forms costing the 6M-doc/2.4 GB-store exact tier
+    // readback (~0.7 s/batch of job barriers) — an r11 streaming-ingest run
+    // measured the unconditional forms costing the 6M-doc/2.4 GB-store exact tier
     // 64→93 s wall while the text they stopped re-scanning was cheap
     // (GenSf1 docs are ~300 B; at production 2-50 KB docs the scan the
     // sidecar bounds is 10-100× the hashes, which is what the gate's 8 GB
@@ -2566,10 +2525,7 @@ object Dedup {
                   bands, rpb, t,
                   selfPairs = false, "new_id", "seen_id",
                   leftBoundedPrune = true, rightBandedPre = preRight,
-                  verifyPrune = Some(verifyMaxInIdsOverride
-                    .map(m => VerifyPrune(resolver, df => verifyPins += df,
-                      maxCollectRows = math.max(500000, m), maxInIds = m))
-                    .getOrElse(VerifyPrune(resolver, df => verifyPins += df))))
+                  verifyPrune = Some(VerifyPrune(resolver, df => verifyPins += df)))
                   .select(col("new_id").as("doc_id")).distinct()
               } else fresh.select(col("doc_id")).limit(0)
             val keepSigs = fresh.join(dropCross, Seq("doc_id"), "left_anti").persist()
@@ -2739,7 +2695,8 @@ object Dedup {
       // distinct+count job and then a second collect of the same rows);
       // a (gate+1)-th row proves over-gate with the final aggregation's
       // take stopped early instead of counting all of it.
-      val probeLimit = math.min(ccCollectMaxEdges + 1, Int.MaxValue.toLong).toInt
+      // clamp before the +1: a gate of Long.MaxValue must not wrap
+      val probeLimit = (math.min(ccCollectMaxEdges, Int.MaxValue - 1L) + 1).toInt
       val probe = phase("cc_edges")(
         edgesOnce.select(col("src").cast("long"), col("dst").cast("long"))
           .limit(probeLimit).collect())

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Phase-attributed profile of the clusterStats workload — the scaling
   * record's one remaining >1 slope (r10: 1.128 on quiet brackets at all
-  * tiers, 3M→6M wall 49.9→162.7 s = 3.26× for 2× rows). Runs the exact
-  * BenchScaling tier (minhashLshPairs threshold=0.5 → clusterPairs →
+  * tiers, 3M→6M wall 49.9→162.7 s = 3.26× for 2× rows). Runs the
+  * clusterStats tier (minhashLshPairs threshold=0.5 → clusterPairs →
   * size histogram) over the size-parameterized [[GenSf1]] corpus at each
   * requested tier with `Dedup.phaseHook` set, materializing a barrier
   * between the verify join and CC so the phases attribute honestly:

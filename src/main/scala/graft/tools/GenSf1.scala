@@ -32,8 +32,8 @@ object GenSf1 {
 
   /** The document corpus at an arbitrary size, same distribution at every
     * size (70/30 base/variant split, tiered rewrites, 5% repetition-heavy):
-    * the scaling sweep [[BenchScaling]] calls this at 1/4×..1× the sf1
-    * volume so its tiers differ ONLY in row count.
+    * [[ClusterProfile]] calls this at any requested size, so its tiers
+    * differ ONLY in row count.
     */
   def writeDocs(spark: SparkSession, out: String, nDocs: Long): Unit = {
     val nBase = nDocs * 7 / 10

@@ -1,6 +1,6 @@
 package graft.tools
 
-/** Host-interference calibration for bench records on shared machines.
+/** Host-interference calibration for benchmark runs on shared machines.
   *
   * The bench host demonstrably runs other tenants: identical back-to-back
   * runs of the SAME commit on the SAME data have produced 92 s / 195 s /
@@ -8,23 +8,23 @@ package graft.tools
   * ratio as wall — i.e. the JVM was scheduled but retired fewer
   * instructions per cycle (SMT-sibling and memory-bandwidth contention),
   * which no amount of in-process care can detect from the workload numbers
-  * alone. The existing `noisy` flag only catches gross warm/cold
-  * inversions inside the headline spread; it says nothing about a steady
-  * 2× slowdown applied uniformly to everything.
+  * alone: a steady 2× slowdown applied uniformly to everything leaves no
+  * trace in the spread of one run's own samples.
   *
   * This kernel is the external reference: a fixed, deterministic unit of
   * work — an ALU-bound FNV-1a fold plus a pseudo-random walk over a 64 MB
   * array (large enough to live in DRAM, so memory-bandwidth contention
   * shows up, small enough to allocate instantly) — timed single-threaded
-  * before and after each heavy bench item. Its wall-time is a pure
+  * before and after each benchmark run or heavy probe item (perfbench
+  * stamps both readings on every run). Its wall-time is a pure
   * function of the host's delivered per-core throughput: on a quiet
   * machine it is flat across a sweep and across rounds; under co-tenant
   * load it inflates by the same factor the workloads do. Recording it per
   * item turns "this number is 3× last round's" into "the host delivered
   * 3× less per-core throughput during this item — compare cal-normalized".
   *
-  * The work is self-checksummed (fold result printed into the record as
-  * `cal_sig`) so a JIT can never dead-code it, and the buffer is touched
+  * The work is self-checksummed (the fold result is returned with the
+  * time) so a JIT can never dead-code it, and the buffer is touched
   * via a 4099-stride walk (co-prime with the 8 MiB long-count) so the
   * prefetcher can't hide DRAM latency.
   */

@@ -16,12 +16,11 @@ package graft.tools
   * [[graft.ext.Kernels.simhashLoop]], [[graft.ext.Kernels.spanCutLoop]]) —
   * not a copy that can drift. Protocol: ~0.3 s of warmup calls (JIT), then
   * ~0.5 s of timed calls in batches of 16 between clock reads; result is
-  * the per-call average. The committed `bench_kernels.json` is the
-  * baseline the next kernel change diffs against (regenerate with the
-  * same command, quiesced).
+  * the per-call average. A kernel change diffs a before and an after run
+  * taken back to back on a quiet host.
   *
   * Usage: sbt "runMain graft.tools.KernelBench"   (writes
-  * bench_kernels.json, override with SPARK_GRAFT_BENCH_KERNELS)
+  * target/bench_kernels.json, override with SPARK_GRAFT_BENCH_KERNELS)
   */
 object KernelBench {
   // mirrors the retired HashSet formulation of jaccardLongKernel, kept as
@@ -43,7 +42,7 @@ object KernelBench {
   private var sink: Double = 0.0
 
   def main(args: Array[String]): Unit = {
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_KERNELS", "bench_kernels.json")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_KERNELS", "target/bench_kernels.json")
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
 
     def bench(name: String)(call: () => Double): Unit = {
@@ -195,7 +194,9 @@ object KernelBench {
       .mkString(
         """{"unit":"ns_per_call","note":"package-visible kernel loops, same code the udfs ship; regenerate quiesced with: sbt \"runMain graft.tools.KernelBench\"","kernels":{""",
         ",", "}}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+    val out = java.nio.file.Paths.get(outPath)
+    Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
+    java.nio.file.Files.write(out,
       (record + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(record)
     System.err.println(s"[kernel-bench] sink=$sink (DCE blackhole)")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Armed-vs-disarmed measurement of the exact-tier store amortizations at
   * REALISTIC document lengths — the datapoint the 8 GB
   * `exactBloomMinStoreBytes` arming gate was priced for by arithmetic but
-  * never measured: bench_stream's corpus is ~300 B/doc (GenSf1 short
+  * never measured: the GenSf1 streaming corpus is ~300 B/doc (short
   * docs), where the armed form LOSES 64→93 s because the text re-scan the
   * hash sidecar replaces is cheap; at production 2-50 KB web docs that
   * re-scan is 10-100× the 33 B/doc sidecar read, which is what the gate's
@@ -149,9 +149,9 @@ object LongDocProbe {
     (0 until nBatches).foreach { b =>
       val batch = spark.read.parquet(writeShard(b))
       // interleave arms within the batch index, ALTERNATING which arm
-      // runs first per batch: IngestAbProbe's A/A control measured a
-      // strong second-runner advantage (warm page cache), so a fixed
-      // order would systematically charge one arm
+      // runs first per batch: an r12 A/A control (identical code both arms)
+      // measured a strong second-runner advantage (warm page cache), so a
+      // fixed order would systematically charge one arm
       val arms = Seq("armed" -> 0L, "disarmed" -> Long.MaxValue)
       val walls = (if (b % 2 == 0) arms else arms.reverse).map { case (arm, gate) =>
         val t0 = System.nanoTime()

@@ -3,16 +3,16 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Writes `.explain("formatted")` for named SparkEntry queries to
-  * `plans/<tag>/<query>_<suffix>.txt` — the before/after plan evidence the
-  * optimization rounds commit (judge checks plan claims against these).
+  * `<dir>/<query>_<suffix>.txt` — before/after plan evidence for a change
+  * that claims a plan shape.
   *
   * Usage: sbt "runMain graft.tools.PlanDump <suffix> <query> [query ...]"
   * e.g.   sbt "runMain graft.tools.PlanDump before q_dedup_minhash q_ann_ivf_sq8"
-  * Env: SPARK_GRAFT_PLANS_DIR (default plans/r15), SPARK_GRAFT_SF_DIR
+  * Env: SPARK_GRAFT_PLANS_DIR (default target/plans), SPARK_GRAFT_SF_DIR
   * (default /root/testdata/sf0.01 — the plan shape, not the timing, is
   * the artifact). Also accepts the three bench headline names
   * (simpleFilter, groupAndAggregate, complexPipeline), planned over the
-  * lineitem table through Aggo like graft.Bench does. */
+  * lineitem table through Aggo. */
 object PlanDump {
   private val headline = Map(
     "simpleFilter" ->
@@ -43,7 +43,7 @@ object PlanDump {
     require(args.length >= 2, "usage: PlanDump <suffix> <query> [query ...]")
     val suffix = args.head
     val names = args.tail.toSeq
-    val plansDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r15")
+    val plansDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "target/plans")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = SparkSession.builder()
       .master("local[8]")

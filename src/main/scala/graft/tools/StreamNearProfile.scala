@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-batch, per-phase cost breakdown of the curated near-dup ingest —
-  * the profiling companion to bench_stream's streamCuratedNear tier
-  * (712 s / 24 batches ≈ 30 s per 250k-doc batch at r10). Drives
+  * over the sf1 corpus (712 s / 24 batches ≈ 30 s per 250k-doc batch at
+  * r10). Drives
   * `Dedup.ingestStep` — the exact per-micro-batch body
   * `curatedIngestSink` delegates to — over the same 24-way split of the
   * sf1 corpus with `Dedup.phaseHook` set, so each batch reports wall
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * the per-batch total here can read a few % above the unsplit sink.
   *
   * Run a subset with SPARK_GRAFT_PROFILE_BATCHES (default 24 = full
-  * corpus, the bench-equivalent store growth).
+  * corpus).
   */
 object StreamNearProfile {
   def main(args: Array[String]): Unit = {
@@ -32,11 +32,6 @@ object StreamNearProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val work = java.nio.file.Files.createTempDirectory("graft-near-profile").toString
-    // A/B attribution knob: SPARK_GRAFT_VERIFY_INSET=0 pins the r13
-    // ranges-or-nothing verify predicate (host-weather sessions can't
-    // otherwise separate the InSet arm's cost from co-tenant drift)
-    if (sys.env.get("SPARK_GRAFT_VERIFY_INSET").contains("0"))
-      graft.ext.Dedup.verifyInSetEnabled = false
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     // same quality gate the sink applies before ingestStep

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Interleaved A/B probe for the sf1UrlDedup regression (r10:
   * 11.1→19.5 s wall / 283→551 CPU-s under QUIET cal brackets, with the
   * url ops untouched in the diff — either an unflagged host pathology or
-  * an interaction worth finding). Runs the exact BenchSf1 workload
+  * an interaction worth finding). Runs the sf1 urlDedup workload
   * (urlDedup over 6M synthesized URLs) `reps` times back-to-back with a
   * HostCal bracket and load reading around every attempt, so a co-tenant
   * burst shows up as attempt-to-attempt variance instead of poisoning a

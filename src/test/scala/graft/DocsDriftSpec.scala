@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import TestSpark._
 
@@ -96,30 +97,33 @@ class DocsDriftSpec extends AnyFunSuite {
     }
   }
 
-  test("README bench-heap protocol matches every committed record's heap_gb") {
-    // the r9 verdict caught README claiming all committed records run at
-    // SPARK_DRIVER_MEM=24g while bench_full.json recorded heap_gb: 89 —
-    // diff the protocol sentence against the records so the claim can't
-    // rot again. The claimed heap and the record list are both parsed from
-    // the protocol bullet itself: editing either side keeps them in sync
-    // or fails here by name.
-    val bullet = readme.linesIterator.dropWhile(!_.contains("Bench heap protocol"))
-      .takeWhile(l => l.contains("Bench heap protocol") || l.startsWith("  ")).mkString(" ")
-    assert(bullet.nonEmpty, "README lost its 'Bench heap protocol' bullet")
-    val claimed = """SPARK_DRIVER_MEM=(\d+)g""".r.findFirstMatchIn(bullet)
-      .getOrElse(fail("protocol bullet states no SPARK_DRIVER_MEM")).group(1).toLong
-    val records = """bench_[a-z0-9_]+\.json""".r.findAllIn(bullet).toSet
-    assert(records.nonEmpty, "protocol bullet names no records")
-    records.foreach { f =>
-      val p = java.nio.file.Paths.get(f)
-      assert(java.nio.file.Files.exists(p), s"protocol names missing record $f")
-      val heap = """"heap_gb"\s*:\s*(\d+)""".r.findFirstMatchIn(read(f))
-        .getOrElse(fail(s"$f carries no heap_gb field")).group(1).toLong
-      // JVM maxMemory under -Xmx24g reports just below 24 GiB; allow the
-      // floor-division wobble of one unit, nothing more
-      assert(math.abs(heap - claimed) <= 1,
-        s"README claims ${claimed}g for all committed records but $f records heap_gb=$heap")
+  test("every runMain in the docs names a main object that exists") {
+    // a deleted or renamed tool leaves `runMain graft.<Name>` recipes
+    // behind that fail only when someone pastes them — collect every
+    // top-level object under src/main/scala with its package and diff
+    val srcRoot = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val w = java.nio.file.Files.walk(srcRoot)
+      try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally w.close()
     }
+    val objects = files.flatMap { f =>
+      val text = read(f.toString)
+      val pkg = """(?m)^package\s+([\w.]+)""".r.findFirstMatchIn(text).map(_.group(1) + ".")
+        .getOrElse("")
+      """(?m)^object\s+(\w+)""".r.findAllMatchIn(text).map(pkg + _.group(1))
+    }.toSet
+    val mainRef = """runMain\s+(graft(?:\.[A-Za-z_]\w*)+)""".r
+    val docs = Seq("README.md", "COVERAGE.md", ".claude/skills/verify/SKILL.md")
+      .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+    val refs = docs.flatMap(d => mainRef.findAllMatchIn(read(d)).map(m => d -> m.group(1)))
+    assert(refs.nonEmpty, "no runMain recipe found in the docs")
+    val missing = refs.filterNot { case (_, name) => objects.contains(name) }
+    assert(missing.isEmpty, s"docs name mains that do not exist: ${missing.mkString(", ")}")
+    // control: the regex reads a recipe across a line break, and a name
+    // with no object behind it fails the lookup
+    val ctl = mainRef.findAllMatchIn("sbt \"runMain\n  graft.tools.__Nope arg\"").map(_.group(1)).toSeq
+    assert(ctl == Seq("graft.tools.__Nope") && !objects.contains(ctl.head))
+    assert(objects.contains("graft.Verify") && objects.contains("graft.tools.Smoke"))
   }
 
   test("every gate query has an oracle and vice versa") {

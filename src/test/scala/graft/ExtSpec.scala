@@ -800,8 +800,8 @@ class ExtSpec extends AnyFunSuite {
     assert(Dedup.scaledBandBuckets(0L) == 64)
     assert(Dedup.scaledBandBuckets(64L * 64000L) == 64)
     assert(Dedup.scaledBandBuckets(64L * 64000L + 1) == 128)
-    // the two measured-good choices BucketProbe settled (r13): 800k docs
-    // x 16 bands -> 256, 3M docs x 16 bands -> 1024
+    // the two measured-good choices the r13 bucket-count sweep settled:
+    // 800k docs x 16 bands -> 256, 3M docs x 16 bands -> 1024
     assert(Dedup.scaledBandBuckets(800000L * 16) == 256)
     assert(Dedup.scaledBandBuckets(3000000L * 16) == 1024)
     assert(Dedup.scaledBandBuckets(Long.MaxValue / 4) == 8192)
@@ -1663,6 +1663,29 @@ class ExtSpec extends AnyFunSuite {
       s"null-id graph labels differ: gate=$withGate distributed=$distributed")
     // the non-null component must still be labeled by its minimum
     assert(withGate.contains((Some(2L), Some(1L))) && withGate.contains((Some(3L), Some(1L))))
+  }
+
+  test("clusterPairs with the gate at Long.MaxValue takes the union-find arm") {
+    // the probe limit is gate+1: unclamped, Long.MaxValue wraps to a
+    // limit of 0 and every graph silently falls to the distributed arm
+    import spark.implicits._
+    val pairs = Seq((1L, 2L, 0.9), (2L, 3L, 0.9), (7L, 8L, 0.9), (9L, 7L, 0.9))
+      .toDF("id_a", "id_b", "jaccard")
+    def run(gate: Long): (Set[(Long, Long)], Set[String]) = {
+      val prior = Dedup.ccCollectMaxEdges
+      val fired = scala.collection.mutable.Set[String]()
+      Dedup.ccCollectMaxEdges = gate
+      Dedup.phaseHook = Some((n, _) => { fired += n; () })
+      try (Dedup.clusterPairs(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toSet,
+        fired.toSet)
+      finally { Dedup.ccCollectMaxEdges = prior; Dedup.phaseHook = None }
+    }
+    val (maxGate, maxPhases) = run(Long.MaxValue)
+    val (distributed, distPhases) = run(0L)
+    assert(maxPhases.contains("cc_unionfind"), s"union-find arm not taken: $maxPhases")
+    assert(!distPhases.contains("cc_unionfind"))
+    assert(maxGate == distributed, s"labels differ: $maxGate vs $distributed")
+    assert(maxGate == Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 7L))
   }
 
   test("keepBestPerCluster keeps the highest-priority member, min id on ties") {

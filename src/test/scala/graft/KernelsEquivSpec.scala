@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+import graft.exprs.catalyst.KernelExprs
 import graft.ext.Kernels
 
 /** r15 optimization guard: the expression-backed kernel tier
@@ -176,6 +179,29 @@ class KernelsEquivSpec extends AnyFunSuite {
         assert(got.getLong(2) == want.getLong(2), s"n=$n id=${r.getLong(0)}: n_removed")
       }
     }
+  }
+
+  test("spanCut rejects a null element in starts instead of reading it as 0") {
+    val toks = new GenericArrayData(Array[Any](
+      UTF8String.fromString("a"), UTF8String.fromString("b"), UTF8String.fromString("c")))
+    // control: the same call with a non-null start cuts token 0 only
+    val ok = KernelExprs.spanCut(toks, new GenericArrayData(Array[Any](0)), 1)
+    assert(ok.getUTF8String(0).toString == "b c")
+    // read as 0, the null would silently cut "a" too and return "b"
+    val e = intercept[IllegalArgumentException] {
+      KernelExprs.spanCut(toks, new GenericArrayData(Array[Any](null, 2)), 1)
+    }
+    assert(e.getMessage.contains("starts[0]"))
+  }
+
+  test("spanCut fails on a kept text past Int.MaxValue bytes before reading any") {
+    // 1 GiB tokens backed by no memory: only numBytes may be read, so the
+    // size check has to fire before the copy (an Int total wraps negative)
+    val huge = new GenericArrayData(Array.fill[Any](3)(UTF8String.fromAddress(null, 0L, 1 << 30)))
+    val e = intercept[IllegalArgumentException] {
+      KernelExprs.spanCut(huge, null, 1)
+    }
+    assert(e.getMessage.contains(s"${3L * (1 << 30) + 2} bytes"))
   }
 
   test("graft_int8_dot == interpreted zip_with/aggregate long dot (exact)") {

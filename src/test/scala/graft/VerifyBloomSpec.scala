@@ -222,53 +222,4 @@ class VerifyBloomSpec extends AnyFunSuite {
     assert(ranges == inset, s"batch lookup diverged: $ranges vs $inset")
     assert(ranges == Set((1L, 10L), (2L, 11L)), s"batch lookup rows: $ranges")
   }
-
-  test("past-cap semi-join arm: identical survivors to the full fetch, and it actually armed") {
-    // the PastCapProbe experiment arm (verifySemiJoinPastCap): when no
-    // plan predicate is pushed (candidate ids past maxInIds), the resolved
-    // matched-dir frame is semi-joined against the pinned candidate ids.
-    // Differential: same three-shard ingest, default vs the arm FORCED
-    // into the past-cap regime (tight-cover 0 declines ranges,
-    // maxInIds override 1 declines the In set), survivors identical.
-    def build(root: String, arm: Boolean): Set[Long] = {
-      val store = s"$root/docs"
-      val bodies = Map(
-        2L -> "alpha document speaks entirely about mountain weather patterns and snowfall",
-        3L -> "beta text covers oceanic current measurements with buoy telemetry data",
-        4L -> "gamma report describes desert irrigation schedules for arid farmland zones",
-        5L -> "delta essay narrates urban transit planning and metro scheduling debates")
-      Seq((0, Seq(2L, 3L)), (1, Seq(4L, 5L))).foreach { case (i, ids) =>
-        Dedup.ingestStep(fromJsonl(ids.map(id =>
-          s"""{"doc_id": $id, "text": "${bodies(id)}"}"""): _*), "doc_id", "text",
-          store, nearThreshold = Some(0.4), batchTag = Some(s"s$i"))
-      }
-      val fired = scala.collection.mutable.Set[String]()
-      Dedup.phaseHook = Some((n, _) => { fired += n; () })
-      try {
-        if (arm) {
-          Dedup.verifyRangeTightCover = 0.0
-          Dedup.verifyMaxInIdsOverride = Some(1)
-          Dedup.verifySemiJoinPastCap = true
-        }
-        Dedup.ingestStep(fromJsonl(
-          (Seq(100L -> 2L, 101L -> 3L, 102L -> 4L, 103L -> 5L).map { case (nid, sid) =>
-            s"""{"doc_id": $nid, "text": "${bodies(sid)} today"}"""
-          } :+ """{"doc_id": 104, "text": "wholly novel fifth subject matter carrying fresh original vocabulary"}"""): _*),
-          "doc_id", "text", store, nearThreshold = Some(0.4), batchTag = Some("s2"))
-      } finally {
-        Dedup.verifyRangeTightCover = 100000.0
-        Dedup.verifyMaxInIdsOverride = None
-        Dedup.verifySemiJoinPastCap = false
-        Dedup.phaseHook = None
-      }
-      if (arm) assert(fired.contains("cand_semijoin"),
-        s"semi-join arm never armed (phases: $fired)")
-      else assert(!fired.contains("cand_semijoin"))
-      Dedup.readStore(spark, store).select("doc_id").collect().map(_.getLong(0)).toSet
-    }
-    val a = build(java.nio.file.Files.createTempDirectory("graft-semij-a").toString, arm = true)
-    val b = build(java.nio.file.Files.createTempDirectory("graft-semij-b").toString, arm = false)
-    assert(a == b, s"semi-join verify diverged: $a vs $b")
-    assert(a == Set(2L, 3L, 4L, 5L, 104L), s"survivorship diverged: $a")
-  }
 }
