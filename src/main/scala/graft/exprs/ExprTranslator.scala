@@ -194,9 +194,9 @@ object ExprTranslator {
       // ---- set operators on arrays (operators.ts:72-125); results sorted
       //      to mirror the reference's $asSet (operators.ts:72-75) ----
       case "$setEquals" =>
-        as.sliding(2).map { case List(x, y) =>
-          array_sort(array_distinct(x)) <=> array_sort(array_distinct(y))
-        }.reduceLeft(_ && _)
+        if (as.size < 2) throw GraftException(s"$op expects at least 2 arguments, got ${as.size}")
+        val sets = as.map(x => array_sort(array_distinct(x)))
+        sets.zip(sets.tail).map { case (x, y) => x <=> y }.reduceLeft(_ && _)
       case "$setIntersection" => array_sort(array_distinct(as.reduceLeft(array_intersect)))
       case "$setUnion"        => array_sort(array_distinct(as.reduceLeft(array_union)))
       case "$setDifference"   => { val (x, y) = binary; array_sort(array_distinct(array_except(x, y))) }
@@ -795,8 +795,6 @@ object ExprTranslator {
         val re0 = strField(fs, "regex", op)
         val opts = fieldOpt(fs, "options").collect { case JString(o) => o }.getOrElse("")
         val re = if (opts.nonEmpty) s"(?$opts)$re0" else re0
-        graft.exprs.catalyst.GraftFunctions.register(
-          org.apache.spark.sql.SparkSession.active)
         val all = call_function(graft.exprs.catalyst.GraftFunctions.RegexFindAllName, in, lit(re))
         // $regexFind = first occurrence or null (Mongo returns null, not a
         // missing field, when nothing matches)

@@ -1735,8 +1735,7 @@ object Dedup {
     * content MISSING from the union — is unreachable because nothing is
     * deleted until the compacted copy is fully in place. A half-written
     * staging root from an earlier crash is wiped by the next attempt.
-    * The byte cache is invalidated for the whole store and a provided
-    * [[SigStoreCache]] drops pins for the deleted dirs.
+    * The byte cache is invalidated for the whole store.
     *
     * The swap deliberately KEEPS the live band-bucket pin (no
     * [[scaledBandBuckets]] growth here): mid-crash, old dirs' sidecars and
@@ -1750,8 +1749,7 @@ object Dedup {
     * @return true if a compaction ran. */
   def autoCompactIngestStore(spark: org.apache.spark.sql.SparkSession, storePath: String,
                              contentCol: String, maxDirs: Int,
-                             targetFileMB: Int = 256,
-                             sigCache: Option[SigStoreCache] = None): Boolean = {
+                             targetFileMB: Int = 256): Boolean = {
     require(maxDirs >= 2, s"maxDirs must be >= 2, got $maxDirs")
     val hconf = spark.sparkContext.hadoopConfiguration
     val dirs = listBatchDirs(spark, storePath)
@@ -1839,8 +1837,6 @@ object Dedup {
       fs(p).delete(p, true)
     }
     invalidateDirBytes(hconf, storePath)
-    sigCache.foreach(_.evictExcept(
-      listBatchDirs(spark, storePath + "_sigs").toSet))
     true
   }
 
@@ -1890,7 +1886,6 @@ object Dedup {
                         idCol: String, contentCol: String,
                         nearThreshold: Option[Double] = None,
                         shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
-                        sigCache: Option[SigStoreCache] = None,
                         exactArmMinStoreBytes: Long = exactBloomMinStoreBytes): Int = {
     val hconf = spark.sparkContext.hadoopConfiguration
     // the replay WRITES the whole dst family (dstPath plus its
@@ -1953,7 +1948,7 @@ object Dedup {
       val batch = srcTombs.fold(base) { case (t, tid) => minusTombstones(base, tid, t) }
       ingestStep(batch, idCol, contentCol, dstPath,
         nearThreshold, shingleSize, numHashes, bands,
-        batchTag = None, sigCache = sigCache,
+        batchTag = None,
         exactArmMinStoreBytes = exactArmMinStoreBytes,
         precomputedSigs = srcSigsByTag.get(d.substring(d.lastIndexOf('/') + 1))
           .map(spark.read.parquet(_)))
@@ -2164,50 +2159,6 @@ object Dedup {
       r
   }
 
-  /** Executor-resident cache of an [[ingestStep]] signature store — the
-    * resident-index pattern a long-running ingest service uses. Without
-    * it, every micro-batch re-reads the WHOLE accumulated sig store from
-    * parquet twice (band-key explode + the verify's shingle fetch): the
-    * r11 StreamNearProfile measured cross_band_verify growing 4→20 s per
-    * batch as the store reached 4.5M docs while every batch-bounded phase
-    * stayed flat. The cache pins each batch directory's frame once, on
-    * first sight (short parquet lineage — an executor-loss recompute
-    * re-reads that one dir, not any batch computation), and serves the
-    * cross-store read as a union of pinned frames; MEMORY_AND_DISK, so an
-    * over-RAM store degrades to local-disk reads, never recompute storms.
-    * Single-writer, like the store itself: the caller that owns the sink
-    * owns the cache. The union plan grows one scan per batch dir — pair a
-    * long-lived stream with periodic store compaction (the same advice the
-    * README gives for the dirs themselves). */
-  final class SigStoreCache(spark: org.apache.spark.sql.SparkSession) {
-    // All access synchronized: close() can race read() — the termination
-    // listener fires on the listener-bus thread while the not-yet-started
-    // registration path can close from the registering thread, and an
-    // unsynchronized LinkedHashMap iterated by one close while the other
-    // clears can throw ConcurrentModificationException or skip unpersists.
-    // The lock is driver-side and per-batch-coarse; it guards map mutation
-    // only, never a Spark job.
-    private val pinned = scala.collection.mutable.LinkedHashMap[String, DataFrame]()
-    private[graft] def read(dirs: Seq[String]): Option[DataFrame] = synchronized {
-      dirs.foreach { d =>
-        if (!pinned.contains(d))
-          pinned(d) = spark.read.parquet(d)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-      val frames = dirs.flatMap(pinned.get)
-      if (frames.isEmpty) None else Some(frames.reduce(_.unionByName(_)))
-    }
-    def close(): Unit = synchronized { pinned.values.foreach(_.unpersist()); pinned.clear() }
-    /** Drop pins for dirs no longer in the store's listing — compaction
-      * deletes batch dirs, and a pin held for a deleted dir is dead
-      * executor memory for the stream's remaining lifetime. */
-    private[graft] def evictExcept(live: Set[String]): Unit = synchronized {
-      val dead = pinned.keys.filterNot(live.contains).toList
-      dead.foreach { d => pinned(d).unpersist(); pinned -= d }
-    }
-    private[graft] def pinnedCount: Int = synchronized(pinned.size)
-  }
-
   /** `precomputedSigs`: a frame of [[signatureTable]]-shaped rows
     * (`doc_id`, `sh`, `sig`) covering AT LEAST the batch's non-null-text
     * documents, derived under the SAME (shingleSize, numHashes, seed)
@@ -2221,7 +2172,6 @@ object Dedup {
                  storePath: String, nearThreshold: Option[Double] = None,
                  shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
                  batchTag: Option[String] = None,
-                 sigCache: Option[SigStoreCache] = None,
                  exactArmMinStoreBytes: Long = exactBloomMinStoreBytes,
                  precomputedSigs: Option[DataFrame] = None): Unit = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
@@ -2509,19 +2459,16 @@ object Dedup {
                 // the bounded verify fetch's resolver: only the sig dirs
                 // that produced candidates, filtered by the chosen id
                 // predicate — BETWEEN ranges row-group-prune against the
-                // sorted sig layout, the In set against the dirs' doc_id
-                // blooms (or cached-batch stat/row prunes under sigCache)
+                // sorted sig layout, the In set against the dirs' doc_id blooms
                 val resolver: (Set[String], Option[IdPredicate]) => DataFrame = {
                   (tags, pred) =>
                     val matched = sigDirs.filter(d => tags.contains(dirTag(d)))
                     if (matched.isEmpty) spark.read.parquet(sigDirs.head).limit(0)
-                    else applyIdPredicate(sigCache.flatMap(_.read(matched))
-                      .getOrElse(spark.read.parquet(matched: _*)), pred)
+                    else applyIdPredicate(spark.read.parquet(matched: _*), pred)
                 }
                 minhashPairsFromSignatures(
                   fresh,
-                  sigCache.flatMap(_.read(sigDirs))
-                    .getOrElse(spark.read.parquet(sigDirs: _*)),
+                  spark.read.parquet(sigDirs: _*),
                   bands, rpb, t,
                   selfPairs = false, "new_id", "seen_id",
                   leftBoundedPrune = true, rightBandedPre = preRight,

@@ -60,28 +60,6 @@ object Kernels {
     h
   }
 
-  /** MinHash signature kernel: one base hash per shingle, `numHashes`
-    * affine permutations bounded to 31 bits (no overflow). */
-  def minhashSig(numHashes: Int, seed: Long): Column => Column = {
-    val rnd = new scala.util.Random(seed)
-    val as = Array.fill(numHashes)(rnd.nextInt(Int.MaxValue - 1).toLong | 1L)
-    val bs = Array.fill(numHashes)(rnd.nextInt(Int.MaxValue).toLong)
-    val g = udf { (shingles: Seq[String]) =>
-      val sig = Array.fill(numHashes)(Long.MaxValue)
-      shingles.foreach { s =>
-        val h = java.lang.Math.floorMod(hash64(s, 42L), Mersenne31)
-        var i = 0
-        while (i < numHashes) {
-          val v = modM31(h * as(i) + bs(i))
-          if (v < sig(i)) sig(i) = v
-          i += 1
-        }
-      }
-      sig
-    }
-    c => g(c)
-  }
-
   /** Best-effort session resolution for the expression-backed kernels:
     * the `Column => Column` builders have no DataFrame in hand, and the
     * native expressions resolve by name through the session function
@@ -163,11 +141,10 @@ object Kernels {
   }
 
   /** Word n-gram shingles hashed to stable 64-bit values — the spill/ship
-    * representation: 8 bytes per shingle instead of the string. Uses the
-    * same base hash (`hash64(s, 42L)`) as [[minhashSig]], so signatures
-    * built from these values are bit-identical to the string path; set
-    * cardinalities (and therefore exact Jaccard) match the string
-    * formulation up to 2^-64 collision odds.
+    * representation: 8 bytes per shingle instead of the string, hashed
+    * with `hash64(s, 42L)`, the base hash [[minhashSigFromHashes]] folds
+    * its permutations over; set cardinalities (and therefore exact
+    * Jaccard) match the string formulation up to 2^-64 collision odds.
     *
     * Emitted SORTED: the hash list is a set up to multiplicity (MinHash
     * folds over it order-free, Jaccard treats it as a set), and sorting
@@ -244,9 +221,8 @@ object Kernels {
     h
   }
 
-  /** MinHash signature from pre-hashed shingles — identical output to
-    * [[minhashSig]] over the corresponding strings (same permutations,
-    * same base hash). */
+  /** MinHash signature from pre-hashed shingles: `numHashes` affine
+    * permutations of each base hash, bounded to 31 bits (no overflow). */
   def minhashSigFromHashes(numHashes: Int, seed: Long): Column => Column = { c =>
     registerActive()
     org.apache.spark.sql.functions.call_function(
@@ -715,52 +691,6 @@ object Kernels {
     c => f(c)
   }
 
-  /** Per-query ADC (asymmetric distance computation) lookup table: for each
-    * subspace, the dot product of the query's subvector with every codeword.
-    * Scoring a PQ code is then `m` table lookups instead of `dim` multiplies
-    * — the standard flat-PQ scan trick. Output `array<array<double>>`
-    * (m × ksub). */
-  def pqAdcTableKernel(codebooks: Array[Array[Array[Double]]]): Column => Column = {
-    val f = udf { (v: Seq[Float]) =>
-      val a = v.toArray // primitive hoist
-      val m = codebooks.length
-      val out = new Array[Seq[Double]](m)
-      var sub = 0
-      var off = 0
-      while (sub < m) {
-        val cb = codebooks(sub)
-        val subDim = cb(0).length
-        val row = new Array[Double](cb.length)
-        var c = 0
-        while (c < cb.length) {
-          val cw = cb(c)
-          var d = 0.0
-          var j = 0
-          while (j < subDim && off + j < a.length) { d += a(off + j) * cw(j); j += 1 }
-          row(c) = d
-          c += 1
-        }
-        out(sub) = row.toSeq
-        off += subDim
-        sub += 1
-      }
-      out.toSeq
-    }
-    c => f(c)
-  }
-
-  /** ADC score of a PQ code against a query's lookup table: Σ table(sub)(code). */
-  def pqAdcScoreKernel: (Column, Column) => Column = {
-    val f = udf { (table: Seq[Seq[Double]], codes: Seq[Int]) =>
-      var s = 0.0
-      var i = 0
-      val n = math.min(table.length, codes.length)
-      while (i < n) { s += table(i)(codes(i)); i += 1 }
-      s
-    }
-    (t, c) => f(t, c)
-  }
-
   /** Driver-side flat ADC table (length m·ksub, row-major by subspace) for
     * one query vector. Shipped in a closure rather than through DataFrame
     * rows — deserializing a nested per-row table once per candidate costs
@@ -788,20 +718,6 @@ object Kernels {
       sub += 1
     }
     out
-  }
-
-  /** ADC scoring against closure-held flat tables keyed by query id string:
-    * m array lookups per candidate, no per-row table deserialization. */
-  def pqAdcScoreClosureKernel(tables: Map[String, Array[Double]], ksub: Int): (Column, Column) => Column = {
-    val f = udf { (qid: String, codes: Seq[Int]) =>
-      val cs = codes.toArray // primitive hoist
-      val t = tables(qid)
-      var s = 0.0
-      var i = 0
-      while (i < cs.length) { s += t(i * ksub + cs(i)); i += 1 }
-      s
-    }
-    (q, c) => f(q, c)
   }
 
   /** Batched flat-ADC sweep over one partition of the PQ code table: each

@@ -402,7 +402,6 @@ object StageTranslator {
         case Some(f) => df.filter(graft.exprs.MatchTranslator.translate(f))
         case None    => df
       }
-      graft.exprs.catalyst.GraftFunctions.register(df.sparkSession)
       val vecC = ExprTranslator.translate(JString("$" + vPath))
       val score = call_function(graft.exprs.catalyst.GraftFunctions.CosineName,
         vecC, array(qvec.map(lit): _*))
@@ -897,12 +896,9 @@ object StageTranslator {
   /** Bounded-heap top-k accumulator (native TypedImperativeAggregate):
     * values of `value` for the k best rows by `key`, ordered best-first.
     * Null keys are ignored, like Mongo's `$minN`/`$maxN`. */
-  private def boundedTopK(key: Column, value: Column, n: Int, smallest: Boolean): Column = {
-    graft.exprs.catalyst.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
+  private def boundedTopK(key: Column, value: Column, n: Int, smallest: Boolean): Column =
     call_function(graft.exprs.catalyst.GraftFunctions.TopKName,
       key, value, lit(n), lit(smallest))
-  }
 
   def accumulator(op: String, arg: JValue, orderKey: Option[Column])(implicit ec: ExprCtx): Column = {
     def e: Column = ExprTranslator.translate(arg)

@@ -37,59 +37,6 @@ final case class FinalSession(key: String, session_start: java.sql.Timestamp,
   */
 object GraftStreaming {
 
-  /** Whether the near-dup sinks hold a [[graft.ext.Dedup.SigStoreCache]]
-    * for the life of the query. Default OFF: an interleaved A/B at the 6M-doc
-    * bench (cal-matched runs, identical 5,064,626 survivors) measured wall a
-    * wash (846.1 s off / 843.4 s on) and CPU 6.7% WORSE with the cache
-    * (9,944 → 10,610 s) — on a single host whose store parquet sits in page
-    * cache, the columnar-cache decompression costs more than the vectorized
-    * parquet re-read it avoids. Turn it ON (SPARK_GRAFT_SIG_CACHE=1) where
-    * the store is remote (S3/HDFS cluster): there the per-batch double
-    * re-read of the accumulated store is network-bound and the resident
-    * index is the standard posture. `var` so specs can pin it. */
-  private[graft] var sigCacheEnabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_SIG_CACHE", "0") == "1"
-
-  /** Tie a sink-held [[graft.ext.Dedup.SigStoreCache]]'s lifetime to its
-    * query: the cache pins one MEMORY_AND_DISK frame per sig-store batch
-    * dir, and the `foreachBatch` closure that owns it dies silently with
-    * the query — without this, every pinned block outlives the sink for
-    * the rest of the SparkSession, and an app that starts/stops ingest
-    * sinks accumulates dead pinned store frames without bound. A
-    * [[org.apache.spark.sql.streaming.StreamingQueryListener]] keyed on
-    * the query id closes the cache on termination (normal stop or
-    * failure) and deregisters itself. */
-  private[graft] def closeCacheOnTermination(
-      query: org.apache.spark.sql.streaming.StreamingQuery,
-      spark: org.apache.spark.sql.SparkSession,
-      cache: Option[graft.ext.Dedup.SigStoreCache])
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    cache.foreach { c =>
-      import org.apache.spark.sql.streaming.StreamingQueryListener
-      val listener: StreamingQueryListener = new StreamingQueryListener {
-        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-          if (e.id == query.id) {
-            c.close()
-            spark.streams.removeListener(this)
-          }
-      }
-      spark.streams.addListener(listener)
-      // close the race with a query that died BEFORE the listener was
-      // registered (e.g. first micro-batch fails on a bad store path):
-      // the bus only delivers termination events to listeners present at
-      // post time, so an already-dead query would leak the cache forever.
-      // close() is idempotent, so the rare both-paths-fire overlap is
-      // harmless.
-      if (!query.isActive) {
-        c.close()
-        spark.streams.removeListener(listener)
-      }
-    }
-    query
-  }
-
   /** Translate a pipeline over a streaming DataFrame. The caller picks the
     * output mode: "update"/"complete" when the pipeline aggregates,
     * "append" otherwise. */
@@ -107,6 +54,7 @@ object GraftStreaming {
       case org.json4s.JObject(fs) => fs.filterNot(_._1 == "_id")
       case other => throw graft.model.GraftException(s"group spec must be an object, got $other")
     }
+    graft.exprs.catalyst.GraftFunctions.register(stream.sparkSession)
     implicit val ec: graft.exprs.ExprCtx =
       graft.exprs.ExprCtx(Some(stream), rootCols = stream.columns.toSeq)
     val aggs = fields.map { case (name, spec) =>
@@ -217,24 +165,17 @@ object GraftStreaming {
                            bands: Int = 16,
                            autoCompactMaxDirs: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    // resident signature index for the life of the query — without it every
-    // batch re-reads the whole accumulated sig store from parquet twice
-    // (see [[graft.ext.Dedup.SigStoreCache]])
-    val sigCache = if (!sigCacheEnabled) None
-      else nearThreshold.map(_ => new graft.ext.Dedup.SigStoreCache(stream.sparkSession))
-    closeCacheOnTermination(
-      stream.writeStream.queryName(queryName)
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.ext.Dedup.ingestStep(batch, idCol, contentCol, storePath,
-            nearThreshold, shingleSize, numHashes, bands,
-            batchTag = Some(batchId.toString), sigCache = sigCache)
-          autoCompactMaxDirs.foreach(m => graft.ext.Dedup.autoCompactIngestStore(
-            batch.sparkSession, storePath, contentCol, m, sigCache = sigCache))
-          ()
-        }
-        .start(),
-      stream.sparkSession, sigCache)
+    stream.writeStream.queryName(queryName)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.ext.Dedup.ingestStep(batch, idCol, contentCol, storePath,
+          nearThreshold, shingleSize, numHashes, bands,
+          batchTag = Some(batchId.toString))
+        autoCompactMaxDirs.foreach(m => graft.ext.Dedup.autoCompactIngestStore(
+          batch.sparkSession, storePath, contentCol, m))
+        ()
+      }
+      .start()
   }
 
   /** Streaming observability: one [[graft.ext.Corpus.manifest]] row set
@@ -395,11 +336,7 @@ object GraftStreaming {
                         funnelPath: Option[String] = None,
                         autoCompactMaxDirs: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    // resident signature index for the life of the query (see
-    // [[graft.ext.Dedup.SigStoreCache]])
-    val sigCache = if (!sigCacheEnabled) None
-      else nearThreshold.map(_ => new graft.ext.Dedup.SigStoreCache(stream.sparkSession))
-    val query = stream.writeStream.queryName(queryName)
+    stream.writeStream.queryName(queryName)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         // receipts re-count every tier, whose lineages all re-derive from
@@ -412,7 +349,7 @@ object GraftStreaming {
         val b = stages.last._2
         graft.ext.Dedup.ingestStep(b, idCol, contentCol, storePath,
           nearThreshold, shingleSize, numHashes, bands,
-          batchTag = Some(batchId.toString), sigCache = sigCache)
+          batchTag = Some(batchId.toString))
         funnelPath.foreach { fp =>
           // survivors = exactly what ingestStep just wrote for this batch
           // (its tag is deterministic from batchId, same sanitization).
@@ -423,12 +360,11 @@ object GraftStreaming {
             .write.mode("append").parquet(fp)
         }
         autoCompactMaxDirs.foreach(m => graft.ext.Dedup.autoCompactIngestStore(
-          batch.sparkSession, storePath, contentCol, m, sigCache = sigCache))
+          batch.sparkSession, storePath, contentCol, m))
         ()
         } finally if (funnelPath.isDefined) batch.unpersist()
       }
       .start()
-    closeCacheOnTermination(query, stream.sparkSession, sigCache)
   }
 
   /** Gap-based sessionization with custom per-key state — the
@@ -587,6 +523,7 @@ object Cdc {
       case JObject(fs) => fs
       case other       => throw graft.model.GraftException(s"group spec must be an object, got $other")
     }
+    graft.exprs.catalyst.GraftFunctions.register(deltas.sparkSession)
     implicit val ec: graft.exprs.ExprCtx =
       graft.exprs.ExprCtx(Some(deltas), rootCols = deltas.columns.toSeq.filterNot(_ == signCol))
     val idExpr = fields.collectFirst { case ("_id", v) => v }
@@ -636,6 +573,7 @@ object Cdc {
       case JObject(fs) => fs
       case other       => throw graft.model.GraftException(s"group spec must be an object, got $other")
     }
+    graft.exprs.catalyst.GraftFunctions.register(deltas.sparkSession)
     implicit val ec: graft.exprs.ExprCtx =
       graft.exprs.ExprCtx(Some(deltas), rootCols = deltas.columns.toSeq.filterNot(_ == signCol))
     val idExpr = fields.collectFirst { case ("_id", v) => v }
@@ -748,5 +686,5 @@ object StreamingCollection {
   /** Row count above which [[StreamingCollection.removeWhere]] logs its
     * driver-materialization warning — a tripwire, not a limit (the API
     * stays correct; it just isn't the scale surface). */
-  @volatile var RemoveWhereWarnRows: Int = 1000000
+  final val RemoveWhereWarnRows = 1000000
 }

@@ -38,8 +38,6 @@ object StreamNearProfile {
     val gated = docs.filter(
       graft.ext.TextFunctions.qualityScore(col("text")) > 0.6)
     val store = s"$work/store"
-    // same resident sig-index the sinks hold for the life of the query
-    val sigCache = new graft.ext.Dedup.SigStoreCache(spark)
     val phases = scala.collection.mutable.LinkedHashMap[String, Double]()
     graft.ext.Dedup.phaseHook = Some((name, sec) =>
       phases(name) = phases.getOrElse(name, 0.0) + sec)
@@ -57,8 +55,7 @@ object StreamNearProfile {
         val batch = spark.read.parquet(s"$work/in-$b")
         val t0 = System.nanoTime()
         graft.ext.Dedup.ingestStep(batch, "doc_id", "text", store,
-          nearThreshold = Some(0.7), batchTag = Some(b.toString),
-          sigCache = Some(sigCache))
+          nearThreshold = Some(0.7), batchTag = Some(b.toString))
         val wall = (System.nanoTime() - t0) / 1e9
         // cand_* entries are METRICS riding the phase hook (candidate-pair
         // count in thousands, matched-dir count), not seconds — keep them

@@ -126,6 +126,38 @@ class DocsDriftSpec extends AnyFunSuite {
     assert(objects.contains("graft.Verify") && objects.contains("graft.tools.Smoke"))
   }
 
+  test("every SPARK_GRAFT_* variable in the docs is read by some code") {
+    // a deleted knob leaves `SPARK_GRAFT_X=1` recipes behind that silently
+    // do nothing; a read is the name as a quoted literal (Scala/Python) or
+    // a `$NAME` expansion (shell) in a source file
+    def files(root: String): List[java.nio.file.Path] = {
+      val p = java.nio.file.Paths.get(root)
+      if (!java.nio.file.Files.exists(p)) Nil
+      else {
+        val w = java.nio.file.Files.walk(p)
+        try w.iterator().asScala.filter(f =>
+          Seq(".scala", ".py", ".sh").exists(f.toString.endsWith)).toList
+        finally w.close()
+      }
+    }
+    val code = Seq("src", "perfbench", "scripts").flatMap(files).map(f => read(f.toString))
+      .mkString("\n")
+    def isRead(name: String): Boolean =
+      Seq("\"" + name + "\"", "'" + name + "'", "$" + name, "${" + name).exists(code.contains)
+    val envRef = """SPARK_GRAFT_[A-Z0-9_]*[A-Z0-9]""".r
+    val docs = Seq("README.md", "COVERAGE.md", ".claude/skills/verify/SKILL.md",
+      "perfbench/README.md").filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+    val refs = docs.flatMap(d => envRef.findAllIn(read(d)).map(d -> _)).distinct
+    assert(refs.nonEmpty, "no SPARK_GRAFT_* variable found in the docs")
+    val unread = refs.filterNot { case (_, name) => isRead(name) }
+    assert(unread.isEmpty, s"docs name env variables no code reads: ${unread.mkString(", ")}")
+    // control: a documented name with no reader fails, one with a reader
+    // passes (the unread name is assembled so this file holds no literal)
+    val nope = "SPARK_GRAFT_" + "NOPE"
+    assert(envRef.findAllIn(s"set `$nope=1` to").toSeq == Seq(nope) && !isRead(nope))
+    assert(isRead("SPARK_GRAFT_CPUS"))
+  }
+
   test("every gate query has an oracle and vice versa") {
     // today's invariant: the correctness gate is oracle-complete — a queries
     // entry without SQL would silently downgrade to a rows-only check

@@ -352,6 +352,58 @@ class ExprSpec extends AnyFunSuite {
       Seq(("ab12", 0, Seq("ab", "12")), ("cd345", 4, Seq("cd", "345"))))
   }
 
+  test("native functions resolve over a frame from a second session") {
+    // graft's native functions resolve by name in the registry of the
+    // session that analyzes the plan; each entry point must register them
+    // on its input frame's session, not on the active/default one
+    val other = spark.newSession()
+    val docs = other.read.json(other.createDataset(Seq(
+      """{"g": "a", "s": "ab12cd345", "v": 3, "sign": 1, "ts": "2024-01-01T10:01:00Z"}""",
+      """{"g": "a", "s": "x7", "v": 1, "sign": 1, "ts": "2024-01-01T10:02:00Z"}""",
+      """{"g": "a", "s": "y8", "v": 2, "sign": 1, "ts": "2024-01-01T10:03:00Z"}"""))(
+      org.apache.spark.sql.Encoders.STRING))
+      .withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
+    def nums(x: Any): Seq[Long] =
+      x.asInstanceOf[scala.collection.Seq[Any]].map(_.toString.toLong).toSeq
+    val find = """{"$regexFind": {"input": "$s", "regex": "[0-9]+"}}"""
+    val cases: Seq[(String, () => Unit)] = Seq(
+      "Aggo.aggregate $minN" -> { () =>
+        val r = Aggo.aggregate(docs,
+          """[{"$group": {"_id": "$g", "lo": {"$minN": {"input": "$v", "n": 2}}}}]""").collect()
+        assert(r.map(x => nums(x.get(1))).toSeq == Seq(Seq(1L, 2L)))
+      },
+      "Aggo.aggregate $regexFindAll" -> { () =>
+        val r = Aggo.aggregate(docs, """[{"$match": {"v": 3}},
+            {"$project": {"all": {"$regexFindAll": {"input": "$s", "regex": "[0-9]+"}}}}]""")
+          .collect()
+        assert(r.head.getSeq[org.apache.spark.sql.Row](0).map(_.getAs[String]("match")) ==
+          Seq("12", "345"))
+      },
+      "Aggo.expression $regexFind" -> { () =>
+        val r = docs.select(Aggo.expression(docs, find).getField("match")).collect()
+        assert(r.map(_.getString(0)).toSet == Set("12", "7", "8"))
+      },
+      "Cdc.aggregateDeltas $regexFind" -> { () =>
+        val r = graft.streaming.Cdc.aggregateDeltas(docs, "sign",
+          s"""{"_id": $find, "n": {"$$sum": 1}}""").collect()
+        assert(r.length == 3)
+      },
+      "Cdc.multisetDeltas $regexFind" -> { () =>
+        val r = graft.streaming.Cdc.multisetDeltas(docs, "sign",
+          s"""{"_id": $find, "lo": {"$$min": "$$v"}}""").collect()
+        assert(r.length == 3)
+      },
+      "windowedAggregate $minN" -> { () =>
+        val r = graft.streaming.GraftStreaming.windowedAggregate(docs, "ts", "1 hour", None,
+          "1 hour", """{"lo": {"$minN": {"input": "$v", "n": 2}}}""").collect()
+        assert(r.map(x => nums(x.getAs[Any]("lo"))).toSeq == Seq(Seq(1L, 2L)))
+      })
+    val failed = cases.flatMap { case (name, run) =>
+      scala.util.Try(run()).failed.toOption.map(e => s"$name: ${e.getMessage.take(200)}")
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
   test("bit operators and N-variant array expressions") {
     val docs = fromJsonl("""{"a": 12, "b": 10, "arr": [5, 1, null, 9, 3]}""")
     val r = agg(docs,
@@ -520,6 +572,12 @@ class ExprSpec extends AnyFunSuite {
   test("unknown operator throws (closed registry, expressions.ts:147)") {
     assertThrows[graft.model.GraftException] {
       agg(fromJsonl("""{"x": 1}"""), """[{"$project": {"y": {"$nope": 1}}}]""")
+    }
+    for (args <- Seq("""["$a"]""", "[]")) {
+      val e = intercept[graft.model.GraftException] {
+        agg(fromJsonl("""{"a": [1]}"""), s"""[{"$$project": {"y": {"$$setEquals": $args}}}]""")
+      }
+      assert(e.getMessage.contains("$setEquals expects at least 2 arguments"), s"$args: ${e.getMessage}")
     }
   }
 }

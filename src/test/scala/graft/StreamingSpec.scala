@@ -220,10 +220,6 @@ class StreamingSpec extends AnyFunSuite {
 
     // near tier: cross-batch near-dups die against the signature store,
     // which accumulates instead of re-shingling the document store.
-    // Runs with the resident SigStoreCache pinned ON (default off) so the
-    // cached cross-store path keeps behavioral coverage.
-    val savedCache = GraftStreaming.sigCacheEnabled
-    GraftStreaming.sigCacheEnabled = true
     val mem2 = MemoryStream[(Long, String)]
     val store2 = java.nio.file.Files.createTempDirectory("graft-store2").toString + "/docs"
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
@@ -243,34 +239,7 @@ class StreamingSpec extends AnyFunSuite {
       q2.processAllAvailable()
       val n2 = graft.ext.Dedup.readStore(spark, store2).select("doc_id").collect().map(_.getLong(0)).toSet
       assert(n2 == Set(1L, 2L, 4L), s"near tier failed: $n2")
-    } finally {
-      q2.stop()
-      GraftStreaming.sigCacheEnabled = savedCache
-    }
-  }
-
-  test("sink-held SigStoreCache is closed when its query terminates") {
-    // the sinks wire closeCacheOnTermination around their cache; tested
-    // here in isolation (a pinned dir + a trivial query) because pinned-RDD
-    // counts on the shared session are polluted by parallel suites
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigcache-close").toString
-    Seq((1L, "x")).toDF("doc_id", "text").write.parquet(s"$dir/batch-0")
-    val cache = new graft.ext.Dedup.SigStoreCache(spark)
-    cache.read(Seq(s"$dir/batch-0"))
-    assert(cache.pinnedCount == 1)
-    val mem = MemoryStream[Long]
-    val q = GraftStreaming.closeCacheOnTermination(
-      mem.toDF().writeStream.format("noop").start(), spark, Some(cache))
-    mem.addData(1L)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    // the termination event is delivered async on the listener bus
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (cache.pinnedCount != 0 && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(cache.pinnedCount == 0, "query termination did not close the sig cache")
+    } finally q2.stop()
   }
 
   test("auto-compaction: sink crosses the dir threshold mid-stream, survivorship unchanged") {
@@ -280,8 +249,6 @@ class StreamingSpec extends AnyFunSuite {
     // (including the regenerated band index) with identical survivorship
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val savedCache = GraftStreaming.sigCacheEnabled
-    GraftStreaming.sigCacheEnabled = true // also covers the cache's pin eviction
     val mem = MemoryStream[(Long, String)]
     val store = java.nio.file.Files.createTempDirectory("graft-autocompact").toString + "/docs"
     val ckpt = java.nio.file.Files.createTempDirectory("graft-autocompact-ckpt").toString
@@ -320,10 +287,7 @@ class StreamingSpec extends AnyFunSuite {
       // no staging leftovers
       assert(!new java.io.File(store + "__compacting").exists(),
         "staging root not cleaned up")
-    } finally {
-      q.stop()
-      GraftStreaming.sigCacheEnabled = savedCache
-    }
+    } finally q.stop()
   }
 
   test("curatedIngestSink gates quality and perplexity before the dedup store") {
