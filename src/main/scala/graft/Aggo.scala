@@ -32,9 +32,6 @@ object Aggo {
   def aggregateParsed(df: DataFrame, stages: Seq[(String, JValue)],
                       collections: Map[String, DataFrame],
                       notes: Option[scala.collection.mutable.ListBuffer[(Int, String)]] = None): DataFrame = {
-    // graft's native functions resolve by name through the registry of the
-    // session that analyzes the plan: the input frame's, not the active one
-    graft.exprs.catalyst.GraftFunctions.register(df.sparkSession)
     // `_seq` carries encounter order (SURVEY §7.4.3): DataFrames are
     // unordered, but `$first/$last/$push` are order-sensitive in Mongo.
     // monotonically_increasing_id is partition-prefixed — stable for a fixed
@@ -174,7 +171,6 @@ object Aggo {
   /** Translate a Mongo expression to a Catalyst Column against a frame —
     * the `$expression` entry point (reference: index.ts:77). */
   def expression(df: DataFrame, exprJson: String): org.apache.spark.sql.Column = {
-    graft.exprs.catalyst.GraftFunctions.register(df.sparkSession)
     graft.exprs.ExprTranslator.translate(org.json4s.jackson.JsonMethods.parse(exprJson))(
       graft.exprs.ExprCtx(Some(df), rootCols = df.columns.toSeq))
   }

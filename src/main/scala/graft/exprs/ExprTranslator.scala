@@ -795,7 +795,7 @@ object ExprTranslator {
         val re0 = strField(fs, "regex", op)
         val opts = fieldOpt(fs, "options").collect { case JString(o) => o }.getOrElse("")
         val re = if (opts.nonEmpty) s"(?$opts)$re0" else re0
-        val all = call_function(graft.exprs.catalyst.GraftFunctions.RegexFindAllName, in, lit(re))
+        val all = graft.exprs.catalyst.GraftFunctions.regexFindAll(in, re)
         // $regexFind = first occurrence or null (Mongo returns null, not a
         // missing field, when nothing matches)
         if (op == "$regexFindAll") all else try_element_at(all, lit(1))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for cosine similarity over `array<float>`
   * embeddings.
@@ -21,10 +22,8 @@ import org.apache.spark.sql.types._
 case class CosineSimilarityExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  // Input typing is enforced by GraftFunctions.register, which casts both
-  // arguments to array<float> (AbstractDataType/ExpectsInputTypes is
-  // private[sql], so the declarative input-type route is unavailable to
-  // external expressions).
+  // Both arguments arrive as array<float>: GraftFunctions.cosine wraps
+  // each in a Coerce to that type.
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_cosine"
@@ -204,9 +203,36 @@ object RegexFindAllExpr {
   }
 }
 
-/** Session registration for Graft's native functions — makes them usable
-  * from both the Column API (via `call_function`) and plain Spark SQL. */
+/** An argument of a native function cast to the type the function reads,
+  * unless it already has that type (for arrays, the element type). The
+  * choice needs the argument's resolved type, which a Column builder does
+  * not have, so it is made during analysis; the optimizer then swaps the
+  * node for its result, so optimized plans hold the bare argument or its
+  * Cast. */
+case class Coerce(child: Expression, to: DataType, fn: String)
+    extends UnaryExpression with RuntimeReplaceable {
+  override lazy val replacement: Expression = (child.dataType, to) match {
+    case (ArrayType(e, _), ArrayType(t, _)) if e == t => child
+    case (_: ArrayType, _: ArrayType) => Cast(child, to)
+    case (other, _: ArrayType) => throw new graft.model.ExpressionError(
+      s"$fn requires an array argument, got $other")
+    case (t, _) if t == to => child
+    case _ => Cast(child, to)
+  }
+  // column names derived from a call read as they did with a plain argument
+  override def sql: String = child.sql
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** graft's native functions as Columns. Each builder constructs its Catalyst
+  * expression directly, so a plan that uses one resolves in any session with
+  * nothing registered. [[register]] exposes the same builders to Spark SQL
+  * under the `*Name`s. */
 object GraftFunctions {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.GraftColumns.{column, expression}
+
   val CosineName = "graft_cosine"
   val DotName = "graft_dot"
   val NfcName = "graft_nfc"
@@ -224,194 +250,112 @@ object GraftFunctions {
   val PositionalGramsName = "graft_positional_grams"
   val SpanCutName = "graft_span_cut"
 
-  /** Literal-int extraction for the registration builders (the graft_top_k
-    * pattern: scalar kernel parameters arrive as plan literals). */
-  private def litInt(name: String, e: Expression): Int = e match {
-    case Literal(i: Int, IntegerType) => i
-    case other => throw new graft.model.ExpressionError(
-      s"$name expects an int literal parameter, got $other")
-  }
+  private def as(fn: String, to: DataType)(c: Column): Expression =
+    Coerce(expression(c), to, fn)
+  private val floats = ArrayType(FloatType)
+  private val longs = ArrayType(LongType)
+  private val bytes = ArrayType(ByteType)
 
-  private def litLong(name: String, e: Expression): Long = e match {
-    case Literal(l: Long, LongType) => l
-    case Literal(i: Int, IntegerType) => i.toLong
-    case other => throw new graft.model.ExpressionError(
-      s"$name expects a long literal parameter, got $other")
-  }
+  def cosine(a: Column, b: Column): Column =
+    column(CosineSimilarityExpr(as(CosineName, floats)(a), as(CosineName, floats)(b)))
 
-  /** Idempotent per-session registration. */
+  def dot(a: Column, b: Column): Column =
+    column(DotProductExpr(as(DotName, floats)(a), as(DotName, floats)(b)))
+
+  def nfc(text: Column): Column = column(NfcNormalizeExpr(as(NfcName, StringType)(text)))
+
+  def regexFindAll(input: Column, pattern: String): Column =
+    column(RegexFindAllExpr(as(RegexFindAllName, StringType)(input), pattern))
+
+  /** Bounded-heap top-k (native TypedImperativeAggregate): values of
+    * `value` for the k best rows by `key`, ordered best-first. Null keys are
+    * ignored, like Mongo's `$minN`/`$maxN`. */
+  def topK(key: Column, value: Column, k: Int, smallest: Boolean): Column =
+    column(BoundedTopKAggregate(expression(key), expression(value), k, smallest)
+      .toAggregateExpression())
+
+  /** Spark's own codegen'd Bloom probe (not in the public registry): the
+    * filter as a foldable binary, the value as an xxhash64 long. */
+  def mightContain(bloom: Column, value: Column): Column =
+    column(BloomFilterMightContain(expression(bloom), expression(value)))
+
+  def hashedShingles(text: Column, n: Int): Column =
+    column(HashedShinglesExpr(as(HashedShinglesName, StringType)(text), n))
+
+  def minhashSig(hashes: Column, numHashes: Int, seed: Long): Column =
+    column(MinhashSigExpr(as(MinhashSigName, longs)(hashes), numHashes, seed))
+
+  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    column(BandKeysExpr(as(BandKeysName, longs)(sig), bands, rowsPerBand))
+
+  def jaccard64(a: Column, b: Column): Column =
+    column(JaccardSortedExpr(as(Jaccard64Name, longs)(a), as(Jaccard64Name, longs)(b)))
+
+  def int8Dot(a: Column, b: Column): Column =
+    column(Int8DotExpr(as(Int8DotName, bytes)(a), as(Int8DotName, bytes)(b)))
+
+  def classifierSum(tokens: Column, weights: Array[Double]): Column =
+    column(ClassifierSumExpr(expression(tokens), weights))
+
+  def wordGrams(tokens: Column, k: Int): Column =
+    column(WordGramsExpr(expression(tokens), k))
+
+  def gramHalves(tokens: Column, n: Int): Column =
+    column(GramHalvesExpr(expression(tokens), n))
+
+  def positionalGrams(tokens: Column, n: Int): Column =
+    column(PositionalGramsExpr(expression(tokens), n))
+
+  def spanCut(tokens: Column, starts: Column, n: Int): Column =
+    column(SpanCutExpr(expression(tokens), expression(starts), n))
+
+  /** Scalar parameters arrive from SQL as plan literals. */
+  private def param[T](name: String, e: Expression)(pf: PartialFunction[Literal, T]): T =
+    e match {
+      case l: Literal if pf.isDefinedAt(l) => pf(l)
+      case other => throw new graft.model.ExpressionError(
+        s"$name expects a literal parameter, got $other")
+    }
+
+  private def litInt(name: String, e: Expression): Int =
+    param(name, e) { case Literal(i: Int, IntegerType) => i }
+
+  /** Makes the native functions callable by name from Spark SQL (and
+    * `call_function`) on `spark`; idempotent. graft's own operators use the
+    * Column builders above and need no registration. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CosineName,
-      { exprs =>
-        require(exprs.length == 2, s"$CosineName expects 2 arguments")
-        CosineSimilarityExpr(
-          castToFloatArray(exprs.head), castToFloatArray(exprs(1)))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotName,
-      { exprs =>
-        require(exprs.length == 2, s"$DotName expects 2 arguments")
-        DotProductExpr(
-          castToFloatArray(exprs.head), castToFloatArray(exprs(1)))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      NfcName,
-      { exprs =>
-        require(exprs.length == 1, s"$NfcName expects 1 argument")
-        NfcNormalizeExpr(exprs.head.dataType match {
-          case StringType => exprs.head
-          case _          => Cast(exprs.head, StringType)
-        })
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      RegexFindAllName,
-      { exprs =>
-        require(exprs.length == 2, s"$RegexFindAllName expects 2 arguments")
-        val pat = exprs(1) match {
-          case Literal(s: org.apache.spark.unsafe.types.UTF8String, StringType) => s.toString
-          case other => throw new graft.model.ExpressionError(
-            s"$RegexFindAllName requires a literal string pattern, got $other")
-        }
-        RegexFindAllExpr(exprs.head.dataType match {
-          case StringType => exprs.head
-          case _          => Cast(exprs.head, StringType)
-        }, pat)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      TopKName,
-      { exprs =>
-        require(exprs.length == 4, s"$TopKName expects (key, value, k, smallest)")
-        val k = exprs(2) match {
-          case Literal(i: Int, IntegerType) => i
-          case other => throw new graft.model.ExpressionError(
-            s"$TopKName k must be an int literal, got $other")
-        }
-        val smallest = exprs(3) match {
-          case Literal(b: Boolean, BooleanType) => b
-          case other => throw new graft.model.ExpressionError(
-            s"$TopKName smallest must be a boolean literal, got $other")
-        }
-        BoundedTopKAggregate(exprs.head, exprs(1), k, smallest)
-      },
-      "built-in")
-    // Spark's own codegen'd Bloom probe (not in the public registry):
-    // bloom filter as a foldable binary, value as an xxhash64 long.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MightContainName,
-      { exprs =>
-        require(exprs.length == 2, s"$MightContainName expects (bloomBinary, longValue)")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs.head, exprs(1))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      HashedShinglesName,
-      { exprs =>
-        require(exprs.length == 2, s"$HashedShinglesName expects (text, n)")
-        HashedShinglesExpr(exprs.head.dataType match {
-          case StringType => exprs.head
-          case _          => Cast(exprs.head, StringType)
-        }, litInt(HashedShinglesName, exprs(1)))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MinhashSigName,
-      { exprs =>
-        require(exprs.length == 3, s"$MinhashSigName expects (hashes, numHashes, seed)")
-        MinhashSigExpr(castToLongArray(MinhashSigName, exprs.head),
-          litInt(MinhashSigName, exprs(1)), litLong(MinhashSigName, exprs(2)))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BandKeysName,
-      { exprs =>
-        require(exprs.length == 3, s"$BandKeysName expects (sig, bands, rowsPerBand)")
-        BandKeysExpr(castToLongArray(BandKeysName, exprs.head),
-          litInt(BandKeysName, exprs(1)), litInt(BandKeysName, exprs(2)))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Jaccard64Name,
-      { exprs =>
-        require(exprs.length == 2, s"$Jaccard64Name expects 2 array arguments")
-        JaccardSortedExpr(castToLongArray(Jaccard64Name, exprs.head),
-          castToLongArray(Jaccard64Name, exprs(1)))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Int8DotName,
-      { exprs =>
-        require(exprs.length == 2, s"$Int8DotName expects 2 array arguments")
-        Int8DotExpr(castToByteArray(Int8DotName, exprs.head),
-          castToByteArray(Int8DotName, exprs(1)))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ClassifierSumName,
-      { exprs =>
-        require(exprs.length == 2, s"$ClassifierSumName expects (tokens, weightsLiteral)")
-        val w = exprs(1) match {
-          case Literal(arr: org.apache.spark.sql.catalyst.util.ArrayData,
-                       ArrayType(DoubleType, _)) => arr.toDoubleArray()
-          case other => throw new graft.model.ExpressionError(
-            s"$ClassifierSumName expects a literal double-array weights argument, got $other")
-        }
-        ClassifierSumExpr(exprs.head, w)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      WordGramsName,
-      { exprs =>
-        require(exprs.length == 2, s"$WordGramsName expects (tokens, k)")
-        WordGramsExpr(exprs.head, litInt(WordGramsName, exprs(1)))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      GramHalvesName,
-      { exprs =>
-        require(exprs.length == 2, s"$GramHalvesName expects (tokens, n)")
-        GramHalvesExpr(exprs.head, litInt(GramHalvesName, exprs(1)))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PositionalGramsName,
-      { exprs =>
-        require(exprs.length == 2, s"$PositionalGramsName expects (tokens, n)")
-        PositionalGramsExpr(exprs.head, litInt(PositionalGramsName, exprs(1)))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SpanCutName,
-      { exprs =>
-        require(exprs.length == 3, s"$SpanCutName expects (tokens, starts, n)")
-        SpanCutExpr(exprs.head, exprs(1), litInt(SpanCutName, exprs(2)))
-      },
-      "built-in")
-  }
-
-  private def castToLongArray(name: String, e: Expression): Expression = e.dataType match {
-    case ArrayType(LongType, _) => e
-    case _: ArrayType           => Cast(e, ArrayType(LongType))
-    case other                  => throw new graft.model.ExpressionError(
-      s"$name requires an array argument, got $other")
-  }
-
-  private def castToByteArray(name: String, e: Expression): Expression = e.dataType match {
-    case ArrayType(ByteType, _) => e
-    case _: ArrayType           => Cast(e, ArrayType(ByteType))
-    case other                  => throw new graft.model.ExpressionError(
-      s"$name requires an array argument, got $other")
-  }
-
-  private def castToFloatArray(e: Expression): Expression = e.dataType match {
-    case ArrayType(FloatType, _) => e
-    case _: ArrayType            => Cast(e, ArrayType(FloatType))
-    case other                   => throw new graft.model.ExpressionError(
-      s"$CosineName requires an array argument, got $other")
+    def fn(name: String, arity: Int)(build: Seq[Expression] => Column): Unit =
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, { es =>
+        require(es.length == arity, s"$name expects $arity arguments")
+        expression(build(es))
+      }, "built-in")
+    def c(e: Expression): Column = column(e)
+    fn(CosineName, 2)(es => cosine(c(es(0)), c(es(1))))
+    fn(DotName, 2)(es => dot(c(es(0)), c(es(1))))
+    fn(NfcName, 1)(es => nfc(c(es(0))))
+    fn(RegexFindAllName, 2)(es => regexFindAll(c(es(0)),
+      param(RegexFindAllName, es(1)) { case Literal(s: UTF8String, StringType) => s.toString }))
+    fn(TopKName, 4)(es => topK(c(es(0)), c(es(1)), litInt(TopKName, es(2)),
+      param(TopKName, es(3)) { case Literal(b: Boolean, BooleanType) => b }))
+    fn(MightContainName, 2)(es => mightContain(c(es(0)), c(es(1))))
+    fn(HashedShinglesName, 2)(es => hashedShingles(c(es(0)), litInt(HashedShinglesName, es(1))))
+    fn(MinhashSigName, 3)(es => minhashSig(c(es(0)), litInt(MinhashSigName, es(1)),
+      param(MinhashSigName, es(2)) {
+        case Literal(l: Long, LongType) => l
+        case Literal(i: Int, IntegerType) => i.toLong
+      }))
+    fn(BandKeysName, 3)(es => bandKeys(c(es(0)), litInt(BandKeysName, es(1)),
+      litInt(BandKeysName, es(2))))
+    fn(Jaccard64Name, 2)(es => jaccard64(c(es(0)), c(es(1))))
+    fn(Int8DotName, 2)(es => int8Dot(c(es(0)), c(es(1))))
+    fn(ClassifierSumName, 2)(es => classifierSum(c(es(0)),
+      param(ClassifierSumName, es(1)) {
+        case Literal(arr: ArrayData, ArrayType(DoubleType, _)) => arr.toDoubleArray()
+      }))
+    fn(WordGramsName, 2)(es => wordGrams(c(es(0)), litInt(WordGramsName, es(1))))
+    fn(GramHalvesName, 2)(es => gramHalves(c(es(0)), litInt(GramHalvesName, es(1))))
+    fn(PositionalGramsName, 2)(es =>
+      positionalGrams(c(es(0)), litInt(PositionalGramsName, es(1))))
+    fn(SpanCutName, 3)(es => spanCut(c(es(0)), c(es(1)), litInt(SpanCutName, es(2))))
   }
 }

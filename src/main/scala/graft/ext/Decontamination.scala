@@ -122,9 +122,6 @@ object Decontamination {
                    threshold: Double, planes: Int = 0, tables: Int = 32,
                    dim: Int = 64, seed: Long = 42L): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold must be in (0,1], got $threshold")
-    graft.exprs.catalyst.GraftFunctions.register(corpusEmb.sparkSession)
-    val cos = (a: Column, b: Column) => org.apache.spark.sql.functions.call_function(
-      graft.exprs.catalyst.GraftFunctions.CosineName, a, b)
     val c = corpusEmb.select(col(idCol).as("__cid"), col(vecCol).as("__cv"))
     val e = evalEmb.select(col(evalVecCol).as("__ev"))
     val candidates =
@@ -138,7 +135,7 @@ object Decontamination {
         cb.join(eb, Seq("__t", "__b")).drop("__t", "__b")
       }
     candidates
-      .withColumn("__cos", cos(col("__cv"), col("__ev")))
+      .withColumn("__cos", graft.exprs.catalyst.GraftFunctions.cosine(col("__cv"), col("__ev")))
       .filter(col("__cos") >= threshold)
       .groupBy(col("__cid"))
       .agg(max(col("__cos")).as("max_cos"))
@@ -310,9 +307,7 @@ object Decontamination {
                             minHits: Int): DataFrame = {
     require(n > 0 && minHits > 0, s"n=$n and minHits=$minHits must be positive")
     val shingle = Kernels.wordShinglesKernel(n)
-    graft.exprs.catalyst.GraftFunctions.register(docs.sparkSession)
-    val hit = call_function(graft.exprs.catalyst.GraftFunctions.MightContainName,
-      lit(bloom), xxhash64(col("__g")))
+    val hit = graft.exprs.catalyst.GraftFunctions.mightContain(lit(bloom), xxhash64(col("__g")))
     docs.select(col(idCol), explode(shingle(col(textCol))).as("__g"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_ngrams"),

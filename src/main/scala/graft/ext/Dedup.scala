@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.exprs.catalyst.GraftFunctions
 
 /** Deduplication operators for 100 TB-scale corpora.
   *
@@ -307,10 +308,8 @@ object Dedup {
     if (bf.bitSize() / 8 <= bloomLiteralMaxBytes) {
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
-      graft.exprs.catalyst.GraftFunctions.register(spark)
-      val bytes = bos.toByteArray
-      (h: Column) => org.apache.spark.sql.functions.call_function(
-        graft.exprs.catalyst.GraftFunctions.MightContainName, lit(bytes), h)
+      val bytes = lit(bos.toByteArray)
+      (h: Column) => GraftFunctions.mightContain(bytes, h)
     } else {
       val bc = spark.sparkContext.broadcast(bf)
       val probe = udf((h: Long) => bc.value.mightContainLong(h))
@@ -564,8 +563,6 @@ object Dedup {
   def signatureTable(df: DataFrame, idCol: String, textCol: String,
                      shingleSize: Int = 3, numHashes: Int = 64,
                      seed: Long = 42L): DataFrame = {
-    // the kernels resolve through the session function registry
-    graft.exprs.catalyst.GraftFunctions.register(df.sparkSession)
     df.select(
       col(idCol).as("doc_id"),
       Kernels.hashedShinglesKernel(shingleSize)(col(textCol)).as("sh"))
@@ -641,8 +638,6 @@ object Dedup {
                                  leftBoundedPrune: Boolean = false,
                                  rightBandedPre: Option[DataFrame] = None,
                                  verifyPrune: Option[VerifyPrune] = None): DataFrame = {
-    // the banding/jaccard kernels resolve through the session registry
-    graft.exprs.catalyst.GraftFunctions.register(left.sparkSession)
     def banded(sigs: DataFrame, idAs: String): DataFrame = sigs.select(
       col(idAs),
       posexplode(Kernels.bandKeysKernel(bands, rowsPerBand)(col("sig"))).as(Seq("band", "band_key")))
@@ -2965,12 +2960,10 @@ object Dedup {
                             threshold: Double, planes: Int = 0, tables: Int = 1,
                             seed: Long = 42L, dim: Int = 64): DataFrame = {
     require(tables >= 1, s"tables must be >= 1, got $tables")
-    graft.exprs.catalyst.GraftFunctions.register(df.sparkSession)
     // norms hoisted per vector (see [[semDedup]]): bit-for-bit the fused
     // cosine at 1/3 of the per-candidate flops
     val base = df.select(col(idCol).as("vid"), col(vecCol).as("v"))
-      .withColumn("__nrm", sqrt(call_function(
-        graft.exprs.catalyst.GraftFunctions.DotName, col("v"), col("v"))))
+      .withColumn("__nrm", sqrt(GraftFunctions.dot(col("v"), col("v"))))
     val candidates =
       if (planes <= 0) {
         val a = base.select(col("vid").as("id_a"), col("v").as("v_a"), col("__nrm").as("n_a"))
@@ -2989,8 +2982,7 @@ object Dedup {
       }
     candidates
       .withColumn("cos", when(col("n_a") * col("n_b") > 0,
-        call_function(graft.exprs.catalyst.GraftFunctions.DotName,
-          col("v_a"), col("v_b")) / (col("n_a") * col("n_b"))))
+        GraftFunctions.dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b"))))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos"))
       .distinct()
@@ -3012,7 +3004,6 @@ object Dedup {
                threshold: Double, iterations: Int = 1, seed: Long = 42L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val centroids = Similarity.kmeansTrain(df, idCol, vecCol, k, iterations, seed)
-    graft.exprs.catalyst.GraftFunctions.register(df.sparkSession)
     // Norms hoisted out of the O(cluster²) pair sweep: each vector's
     // sqrt(dot(v,v)) is computed ONCE here, and the pair stage divides the
     // pair dot by the norm product — bit-for-bit the fused cosine (same
@@ -3021,8 +3012,7 @@ object Dedup {
     // the d > 0 guard below.
     val assigned = spill(df.select(col(idCol).as("vid"), col(vecCol).as("v"))
       .withColumn("__cluster", Similarity.kmeansAssign(col("v"), centroids))
-      .withColumn("__nrm", sqrt(call_function(
-        graft.exprs.catalyst.GraftFunctions.DotName, col("v"), col("v")))),
+      .withColumn("__nrm", sqrt(GraftFunctions.dot(col("v"), col("v")))),
       "graft-semdedup-assign")
     val a = assigned.select(col("__cluster"), col("vid").as("id_a"),
       col("v").as("v_a"), col("__nrm").as("n_a"))
@@ -3031,8 +3021,7 @@ object Dedup {
     val pairs = a.join(b, Seq("__cluster"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("cos", when(col("n_a") * col("n_b") > 0,
-        call_function(graft.exprs.catalyst.GraftFunctions.DotName,
-          col("v_a"), col("v_b")) / (col("n_a") * col("n_b"))))
+        GraftFunctions.dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b"))))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"))
     val losers = spillSized(clusterPairs(pairs)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
+import graft.exprs.catalyst.GraftFunctions
 
 /** Tight JVM kernels for the signature/similarity inner loops.
   *
@@ -60,31 +61,13 @@ object Kernels {
     h
   }
 
-  /** Best-effort session resolution for the expression-backed kernels:
-    * the `Column => Column` builders have no DataFrame in hand, and the
-    * native expressions resolve by name through the session function
-    * registry (the graft_top_k route — constructing a Column from a raw
-    * catalyst Expression is private[sql]). Registration is idempotent and
-    * cheap; the operator entry points that own a DataFrame also register
-    * on THEIR session (see Dedup.signatureTable), so a builder invoked on
-    * a thread whose active session differs can still resolve. */
-  @inline private def registerActive(): Unit =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.exprs.catalyst.GraftFunctions.register)
-
   /** Band keys from a signature: hash each of `bands` contiguous slices.
     * Expression-backed (see [[graft.exprs.catalyst.BandKeysExpr]]): the
     * r14 ScalaUDF form paid a boxed Seq[Long] conversion per row on every
     * banding pass — this runs [[bandKeysLoop]] straight off the Catalyst
     * array, zero per-element boxing, bit-identical keys. */
-  def bandKeysKernel(bands: Int, rowsPerBand: Int): Column => Column = { c =>
-    registerActive()
-    org.apache.spark.sql.functions.call_function(
-      graft.exprs.catalyst.GraftFunctions.BandKeysName,
-      c, org.apache.spark.sql.functions.lit(bands),
-      org.apache.spark.sql.functions.lit(rowsPerBand))
-  }
+  def bandKeysKernel(bands: Int, rowsPerBand: Int): Column => Column =
+    GraftFunctions.bandKeys(_, bands, rowsPerBand)
 
   /** The band-fold loop behind [[bandKeysKernel]] — package-visible so
     * [[graft.tools.KernelBench]] measures the SAME code the expression
@@ -153,12 +136,7 @@ object Kernels {
     * LSH candidate pairs, and per-pair sorting re-paid the O(n log n)
     * each time (isolated kernel bench: 250µs → 32µs per 2k-shingle pair,
     * 7.5µs → 1.4µs at 100). */
-  def hashedShinglesKernel(n: Int): Column => Column = { c =>
-    registerActive()
-    org.apache.spark.sql.functions.call_function(
-      graft.exprs.catalyst.GraftFunctions.HashedShinglesName,
-      c, org.apache.spark.sql.functions.lit(n))
-  }
+  def hashedShinglesKernel(n: Int): Column => Column = GraftFunctions.hashedShingles(_, n)
 
   /** The tokenize+window+hash loop behind [[hashedShinglesKernel]]
     * (expression-backed since r15; package-visible so KernelsEquivSpec and
@@ -223,13 +201,8 @@ object Kernels {
 
   /** MinHash signature from pre-hashed shingles: `numHashes` affine
     * permutations of each base hash, bounded to 31 bits (no overflow). */
-  def minhashSigFromHashes(numHashes: Int, seed: Long): Column => Column = { c =>
-    registerActive()
-    org.apache.spark.sql.functions.call_function(
-      graft.exprs.catalyst.GraftFunctions.MinhashSigName,
-      c, org.apache.spark.sql.functions.lit(numHashes),
-      org.apache.spark.sql.functions.lit(seed))
-  }
+  def minhashSigFromHashes(numHashes: Int, seed: Long): Column => Column =
+    GraftFunctions.minhashSig(_, numHashes, seed)
 
   /** The signature inner loop behind [[minhashSigFromHashes]] —
     * package-visible so [[graft.tools.KernelBench]] measures the SAME code
@@ -268,12 +241,7 @@ object Kernels {
     * the r15 ScalaUDF form paid a boxed Seq[String] input conversion plus a
     * Tuple2→struct encoder per GRAM on the operator's hottest pass (sf1:
     * ~350M grams per phase, and the kernel runs once per prefilter phase). */
-  def positionalGramHashKernel(n: Int): Column => Column = { c =>
-    registerActive()
-    org.apache.spark.sql.functions.call_function(
-      graft.exprs.catalyst.GraftFunctions.PositionalGramsName,
-      c, org.apache.spark.sql.functions.lit(n))
-  }
+  def positionalGramHashKernel(n: Int): Column => Column = GraftFunctions.positionalGrams(_, n)
 
   /** First-seed-only positional gram fingerprints (`_1` of
     * [[positionalGramHashKernel]]'s struct, bit-identical by shared loop) —
@@ -281,12 +249,7 @@ object Kernels {
     * and computing the struct to throw half of it away cost a second
     * char-hash pass plus a per-gram struct allocation over the FULL gram
     * count (the operator's single largest CPU line at sf1). */
-  def gramHalvesKernel(n: Int): Column => Column = { c =>
-    registerActive()
-    org.apache.spark.sql.functions.call_function(
-      graft.exprs.catalyst.GraftFunctions.GramHalvesName,
-      c, org.apache.spark.sql.functions.lit(n))
-  }
+  def gramHalvesKernel(n: Int): Column => Column = GraftFunctions.gramHalves(_, n)
 
   /** The two-seed gram-fingerprint core: per-token char hashes hoisted
     * once per seed, then one FNV-style fold per position per requested
@@ -348,12 +311,7 @@ object Kernels {
     * filter/sequence/slice formulation in `Dedup.cutCoveredSpans`, which
     * walked interpreted HOF expression trees per element and cost ~2,900
     * CPU-s at sf1 where this loop costs a few hundred. */
-  def spanCutKernel(n: Int): (Column, Column) => Column = { (toks, starts) =>
-    registerActive()
-    org.apache.spark.sql.functions.call_function(
-      graft.exprs.catalyst.GraftFunctions.SpanCutName,
-      toks, starts, org.apache.spark.sql.functions.lit(n))
-  }
+  def spanCutKernel(n: Int): (Column, Column) => Column = GraftFunctions.spanCut(_, _, n)
 
   /** The gap-slicing loop behind [[spanCutKernel]] — package-visible so
     * [[graft.tools.KernelBench]] measures the SAME code the udf ships. */
@@ -432,11 +390,7 @@ object Kernels {
     * a wrong answer). Sorting per PAIR was the dominant verify cost — a
     * hot document re-paid its O(n log n) once per candidate pair it
     * appeared in (isolated bench: 250µs → 32µs per 2k-shingle pair). */
-  val jaccardLongKernel: (Column, Column) => Column = { (a, b) =>
-    registerActive()
-    org.apache.spark.sql.functions.call_function(
-      graft.exprs.catalyst.GraftFunctions.Jaccard64Name, a, b)
-  }
+  val jaccardLongKernel: (Column, Column) => Column = GraftFunctions.jaccard64
 
   /** 64-bit SimHash over a token array. */
   def simhashKernel: Column => Column = {

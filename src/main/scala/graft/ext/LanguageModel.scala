@@ -62,13 +62,10 @@ object LanguageModel {
     // null/short token arrays, exactly the when/otherwise guard it
     // replaces; gram strings identical, so counts and every downstream
     // join key are unchanged).
-    graft.exprs.catalyst.GraftFunctions.register(corpus.sparkSession)
     val toks = corpus.select(TextFunctions.tokens(col(textCol)).as("__t"))
     (1 to n).map { k =>
       toks
-        .select(explode(call_function(
-          graft.exprs.catalyst.GraftFunctions.WordGramsName,
-          col("__t"), lit(k))).as("gram"))
+        .select(explode(graft.exprs.catalyst.GraftFunctions.wordGrams(col("__t"), k)).as("gram"))
         .groupBy(col("gram"))
         .agg(count(lit(1)).as("cnt"))
         .withColumn("order", lit(k))

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.exprs.catalyst.GraftFunctions
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (`array<float>`/`array<double>`).
@@ -20,31 +21,16 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Cosine via the native codegen expression (graft.exprs.catalyst) —
-    * registered on the frame's session, bit-identical to the kernel/HOF
-    * forms. */
-  private def nativeCosine(df: DataFrame)(a: Column, b: Column): Column = {
-    graft.exprs.catalyst.GraftFunctions.register(df.sparkSession)
-    call_function(graft.exprs.catalyst.GraftFunctions.CosineName, a, b)
-  }
-
   /** Per-vector norm hoisted out of a pair sweep (see `Dedup.semDedup`):
     * sqrt(dot(v,v)) computed once per frame row, below the join that fans
     * the row out to its candidate pairs. */
-  private def nativeNorm(df: DataFrame)(v: Column): Column = {
-    graft.exprs.catalyst.GraftFunctions.register(df.sparkSession)
-    sqrt(call_function(graft.exprs.catalyst.GraftFunctions.DotName, v, v))
-  }
+  private def nativeNorm(v: Column): Column = sqrt(GraftFunctions.dot(v, v))
 
   /** Cosine from a pair dot and hoisted norms — bit-for-bit the fused
-    * [[nativeCosine]] (identical ascending summations, identical
+    * [[GraftFunctions.cosine]] (identical ascending summations, identical
     * sqrt(na)*sqrt(nb) product) at a third of the per-pair flops. */
-  private def cosFromNorms(df: DataFrame)(a: Column, b: Column,
-                                          na: Column, nb: Column): Column = {
-    graft.exprs.catalyst.GraftFunctions.register(df.sparkSession)
-    when(na * nb > 0,
-      call_function(graft.exprs.catalyst.GraftFunctions.DotName, a, b) / (na * nb))
-  }
+  private def cosFromNorms(a: Column, b: Column, na: Column, nb: Column): Column =
+    when(na * nb > 0, GraftFunctions.dot(a, b) / (na * nb))
 
   /** Deterministic per-query top-k over a scored candidate frame of
     * exactly (query_id, neighbor_id, score) — the scale-safe replacement
@@ -61,7 +47,6 @@ object Similarity {
     * range. Output is (query_id, rank, neighbor_id, score) with rank
     * 1-based in heap (= window) order. */
   private def topKByScore(scored: DataFrame, k: Int, scoreName: String): DataFrame = {
-    graft.exprs.catalyst.GraftFunctions.register(scored.sparkSession)
     val s = col(scoreName)
     val heapKey = struct(
       when(s.isNull, lit(Double.PositiveInfinity))
@@ -72,8 +57,7 @@ object Similarity {
       .select(col("query_id"), heapKey.as("__key"),
         struct(col("neighbor_id"), s.as(scoreName)).as("__val"))
       .groupBy(col("query_id"))
-      .agg(call_function(graft.exprs.catalyst.GraftFunctions.TopKName,
-        col("__key"), col("__val"), lit(k), lit(true)).as("__topk"))
+      .agg(GraftFunctions.topK(col("__key"), col("__val"), k, smallest = true).as("__topk"))
       .select(col("query_id"), posexplode(col("__topk")).as(Seq("__p", "__v")))
       .select(col("query_id"), (col("__p") + 1).as("rank"),
         col("__v.neighbor_id").as("neighbor_id"),
@@ -243,12 +227,12 @@ object Similarity {
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .withColumn("q_nrm", nativeNorm(corpus)(col("q_vec"))))
+      .withColumn("q_nrm", nativeNorm(col("q_vec"))))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .withColumn("c_nrm", nativeNorm(corpus)(col("c_vec")))
+      .withColumn("c_nrm", nativeNorm(col("c_vec")))
     val scored = q.crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosFromNorms(corpus)(col("q_vec"), col("c_vec"),
+      .withColumn("cos", cosFromNorms(col("q_vec"), col("c_vec"),
         col("q_nrm"), col("c_nrm")))
       .select(col("query_id"), col("neighbor_id"), col("cos"))
     topKByScore(scored, k, "cos")
@@ -359,11 +343,11 @@ object Similarity {
     // norms hoisted BELOW the probe join: once per broadcast query row and
     // once per index row, so the per-candidate cosine is a single dot
     val probes = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .withColumn("q_nrm", nativeNorm(queries)(col("q_vec")))
+      .withColumn("q_nrm", nativeNorm(col("q_vec")))
       .withColumn("cluster",
         explode(Kernels.nearestCentroidsKernel(index.centroids, nprobe)(col("q_vec")))))
     val indexed = index.indexed
-      .withColumn("c_nrm", nativeNorm(queries)(col("c_vec")))
+      .withColumn("c_nrm", nativeNorm(col("c_vec")))
     // no pair dedup needed: every index vector lives in exactly ONE
     // cluster (assigned with the single nearest centroid at build time)
     // and the probe list per query is nprobe DISTINCT clusters, so the
@@ -372,7 +356,7 @@ object Similarity {
     // the vectors for nothing
     val scored = probes.join(indexed, "cluster")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosFromNorms(queries)(col("q_vec"), col("c_vec"),
+      .withColumn("cos", cosFromNorms(col("q_vec"), col("c_vec"),
         col("q_nrm"), col("c_nrm")))
       .select(col("query_id"), col("neighbor_id"), col("cos"))
     topKByScore(scored, k, "cos")
@@ -421,11 +405,8 @@ object Similarity {
     * `aggregate(zip_with(...))` form it replaced in r15 (which walked ~3
     * interpreted expression-tree nodes per element per call on every
     * candidate row — the measured dominant cost of the whole probe). */
-  private def int8DotRaw(df: DataFrame)(a: Column, b: Column): Column = {
-    graft.exprs.catalyst.GraftFunctions.register(df.sparkSession)
-    call_function(graft.exprs.catalyst.GraftFunctions.Int8DotName, a, b)
-      .cast("double")
-  }
+  private def int8DotRaw(a: Column, b: Column): Column =
+    GraftFunctions.int8Dot(a, b).cast("double")
 
   /** Probe-only IVF-SQ8 search against a prebuilt [[IvfSq8Index]]: cluster
     * equi-join + int8 approximate scoring + exact re-rank of the top
@@ -439,11 +420,10 @@ object Similarity {
     * `sqrt(na*nb)` product, identical quotient, bit-identical scores. */
   def ivfSq8TopK(queries: DataFrame, index: IvfSq8Index, idCol: String,
                  vecCol: String, k: Int, nprobe: Int, rerank: Int): DataFrame = {
-    val i8 = int8DotRaw(queries) _
     val qdf = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val probes = broadcast(qdf
       .withColumn("q8q", quantizeInt8(col("q_vec")))
-      .withColumn("__qn", i8(col("q8q").getField("codes"), col("q8q").getField("codes")))
+      .withColumn("__qn", int8DotRaw(col("q8q").getField("codes"), col("q8q").getField("codes")))
       .withColumn("cluster",
         explode(Kernels.nearestCentroidsKernel(index.centroids, nprobe)(col("q_vec")))))
     // pairs are unique by construction (one cluster per index vector,
@@ -452,12 +432,12 @@ object Similarity {
     // heap, so neither the codes nor the query vectors ever cross an
     // exchange with the candidate set
     val indexedN = index.indexed.select("cluster", "neighbor_id", "q8")
-      .withColumn("__cn", i8(col("q8").getField("codes"), col("q8").getField("codes")))
+      .withColumn("__cn", int8DotRaw(col("q8").getField("codes"), col("q8").getField("codes")))
     val nrm = sqrt(col("__qn") * col("__cn"))
     val approx = probes.join(indexedN, "cluster")
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("a_score", when(nrm > 0,
-        i8(col("q8q").getField("codes"), col("q8").getField("codes")) / nrm))
+        int8DotRaw(col("q8q").getField("codes"), col("q8").getField("codes")) / nrm))
       .select(col("query_id"), col("neighbor_id"), col("a_score"))
     // the survivor set is bounded (|queries|·rerank) — broadcast it into
     // the index scan for the exact re-rank instead of shuffling the index
@@ -466,7 +446,7 @@ object Similarity {
     val rescored = index.indexed.select(col("neighbor_id"), col("c_vec"))
       .join(broadcast(cand), Seq("neighbor_id"))
       .join(broadcast(qdf), Seq("query_id"))
-      .withColumn("cos", nativeCosine(queries)(col("q_vec"), col("c_vec")))
+      .withColumn("cos", GraftFunctions.cosine(col("q_vec"), col("c_vec")))
       .select(col("query_id"), col("neighbor_id"), col("cos"))
     topKByScore(rescored, k, "cos")
   }
@@ -630,7 +610,7 @@ object Similarity {
     val rescored = index.codes.select(col("neighbor_id"), col("c_vec"))
       .join(broadcast(cand), Seq("neighbor_id"))
       .join(broadcast(qdf), Seq("query_id"))
-      .withColumn("cos", nativeCosine(queries)(col("q_vec"), col("c_vec")))
+      .withColumn("cos", GraftFunctions.cosine(col("q_vec"), col("c_vec")))
       .select(col("query_id"), col("neighbor_id"), col("cos"))
     topKByScore(rescored, k, "cos")
   }
@@ -715,7 +695,7 @@ object Similarity {
     val rescored = index.indexed.select(col("neighbor_id"), col("c_vec"))
       .join(broadcast(cand), Seq("neighbor_id"))
       .join(broadcast(qdf), Seq("query_id"))
-      .withColumn("cos", nativeCosine(queries)(col("q_vec"), col("c_vec")))
+      .withColumn("cos", GraftFunctions.cosine(col("q_vec"), col("c_vec")))
       .select(col("query_id"), col("neighbor_id"), col("cos"))
     topKByScore(rescored, k, "cos")
   }
@@ -1493,7 +1473,7 @@ object Similarity {
     def bucketed(df: DataFrame, vecName: String, idName: String,
                  nrmName: String): DataFrame = {
       val withBuckets = df.select(col(idCol).as(idName), col(vecCol).as(vecName))
-        .withColumn(nrmName, nativeNorm(df)(col(vecName)))
+        .withColumn(nrmName, nativeNorm(col(vecName)))
         .withColumn("buckets",
           Kernels.hyperplaneBucketsKernel(planes, tables, dim, seed)(col(vecName)))
       withBuckets.select(col(idName), col(vecName), col(nrmName),
@@ -1509,7 +1489,7 @@ object Similarity {
     // (query_id, neighbor_id, cos) rows, never the vectors
     val candidates = q.join(c, Seq("table", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosFromNorms(corpus)(col("q_vec"), col("c_vec"),
+      .withColumn("cos", cosFromNorms(col("q_vec"), col("c_vec"),
         col("q_nrm"), col("c_nrm")))
       .select(col("query_id"), col("neighbor_id"), col("cos")).distinct()
     topKByScore(candidates, k, "cos")

@@ -307,15 +307,11 @@ object TextFunctions {
   }
 
   /** Unicode NFC canonicalization via the native codegen expression
-    * (graft.exprs.catalyst.NfcNormalizeExpr), registered on the active
-    * session. Run this BEFORE any hash-based dedup or n-gram matching:
-    * composed and decomposed forms of the same rendered text are different
-    * byte strings and silently defeat exact-match tiers. */
-  def normalizeNfc(text: Column): Column = {
-    graft.exprs.catalyst.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
-    call_function(graft.exprs.catalyst.GraftFunctions.NfcName, text)
-  }
+    * (graft.exprs.catalyst.NfcNormalizeExpr). Run this BEFORE any
+    * hash-based dedup or n-gram matching: composed and decomposed forms of
+    * the same rendered text are different byte strings and silently defeat
+    * exact-match tiers. */
+  def normalizeNfc(text: Column): Column = graft.exprs.catalyst.GraftFunctions.nfc(text)
 
   /** Host part of a URL, lowercased: scheme and userinfo stripped, cut at
     * the first `/:?#`. A single regex (RE2-compatible, reproduced by the
@@ -628,12 +624,9 @@ object TextFunctions {
     // digests the UTF-8 bytes and takes the same first 60 bits
     // arithmetically, left-folding the sum in the same token order, so the
     // score doubles are bit-identical (KernelsEquivSpec).
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.exprs.catalyst.GraftFunctions.register)
     val toks = tokens(text)
-    val mean = call_function(graft.exprs.catalyst.GraftFunctions.ClassifierSumName,
-      toks, lit(weights.toArray)) / size(toks)
+    val mean = graft.exprs.catalyst.GraftFunctions.classifierSum(toks, weights.toArray) /
+      size(toks)
     when(size(toks) > 0,
       lit(1.0) / (lit(1.0) + exp(-(lit(bias) + mean))))
       .otherwise(lit(1.0 / (1.0 + math.exp(-bias))))

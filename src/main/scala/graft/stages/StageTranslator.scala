@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import org.json4s._
 
 import graft.exprs.{ExprCtx, ExprTranslator, MatchTranslator}
+import graft.exprs.catalyst.GraftFunctions.topK
 import graft.model.GraftException
 
 /** One sort key: column path, ascending?. */
@@ -403,8 +404,7 @@ object StageTranslator {
         case None    => df
       }
       val vecC = ExprTranslator.translate(JString("$" + vPath))
-      val score = call_function(graft.exprs.catalyst.GraftFunctions.CosineName,
-        vecC, array(qvec.map(lit): _*))
+      val score = graft.exprs.catalyst.GraftFunctions.cosine(vecC, array(qvec.map(lit): _*))
       // deterministic boundary: score ties (duplicate embeddings) are broken
       // by the md5 row key, same device as $sample — Mongo leaves tie order
       // unspecified, but a nondeterministic result SET would flake any
@@ -893,13 +893,6 @@ object StageTranslator {
 
   /** `$group` accumulator → Spark aggregate Column (accumulators.ts:20-317).
     * All reference accumulators map to Catalyst built-ins (SURVEY §7.3). */
-  /** Bounded-heap top-k accumulator (native TypedImperativeAggregate):
-    * values of `value` for the k best rows by `key`, ordered best-first.
-    * Null keys are ignored, like Mongo's `$minN`/`$maxN`. */
-  private def boundedTopK(key: Column, value: Column, n: Int, smallest: Boolean): Column =
-    call_function(graft.exprs.catalyst.GraftFunctions.TopKName,
-      key, value, lit(n), lit(smallest))
-
   def accumulator(op: String, arg: JValue, orderKey: Option[Column])(implicit ec: ExprCtx): Column = {
     def e: Column = ExprTranslator.translate(arg)
     op match {
@@ -914,9 +907,9 @@ object StageTranslator {
       // every SQL user expects); set graft.parity.avg=reference to match the
       // reference bit-for-bit.
       case "$avg" =>
-        val mode = org.apache.spark.sql.SparkSession.active.conf
-          .get("graft.parity.avg", "sql")
-        if (mode == "reference")
+        val reference = ec.df.exists(_.sparkSession.conf
+          .getOption("graft.parity.avg").contains("reference"))
+        if (reference)
           coalesce(sum(e.cast("double")), lit(0.0)) / count(lit(1))
         else avg(e)
       case "$min"          => min(e)
@@ -962,7 +955,7 @@ object StageTranslator {
           .getOrElse(throw GraftException(s"$op requires input"))
         val n = fs.collectFirst { case ("n", JInt(i)) => i.toInt }
           .getOrElse(throw GraftException(s"$op requires n"))
-        boundedTopK(in, in, n, smallest = op == "$minN")
+        topK(in, in, n, smallest = op == "$minN")
       case "$firstN" | "$lastN" =>
         val fs = arg match { case JObject(f) => f; case _ => throw GraftException(s"$op requires {input, n}") }
         val in = fs.collectFirst { case ("input", v) => ExprTranslator.translate(v) }
@@ -970,9 +963,9 @@ object StageTranslator {
         val n = fs.collectFirst { case ("n", JInt(i)) => i.toInt }
           .getOrElse(throw GraftException(s"$op requires n"))
         val k = orderKey.getOrElse(throw GraftException(s"$op requires encounter order"))
-        if (op == "$firstN") boundedTopK(k, in, n, smallest = true)
+        if (op == "$firstN") topK(k, in, n, smallest = true)
         // last n, re-reversed back into encounter order
-        else reverse(boundedTopK(k, in, n, smallest = false))
+        else reverse(topK(k, in, n, smallest = false))
       // Percentiles (Mongo 7.0 surface; extension). Mongo's default method
       // is approximate t-digest; we use Spark's exact `percentile`/`median`
       // (linear interpolation, same definition DuckDB's quantile_cont uses)
@@ -1034,11 +1027,11 @@ object StageTranslator {
         val key = if (encoded.size == 1) struct(encoded.head.as("k0"))
           else struct(encoded.zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
         op match {
-          case "$top"     => try_element_at(boundedTopK(key, out, 1, smallest = true), lit(1))
-          case "$bottom"  => try_element_at(boundedTopK(key, out, 1, smallest = false), lit(1))
-          case "$topN"    => boundedTopK(key, out, n.get, smallest = true)
+          case "$top"     => try_element_at(topK(key, out, 1, smallest = true), lit(1))
+          case "$bottom"  => try_element_at(topK(key, out, 1, smallest = false), lit(1))
+          case "$topN"    => topK(key, out, n.get, smallest = true)
           // bottom n, re-reversed back into sortBy order
-          case "$bottomN" => reverse(boundedTopK(key, out, n.get, smallest = false))
+          case "$bottomN" => reverse(topK(key, out, n.get, smallest = false))
         }
       case "$mergeObjects" => throw GraftException("$mergeObjects accumulator not supported")
       case other => throw GraftException(s"unknown accumulator $other")

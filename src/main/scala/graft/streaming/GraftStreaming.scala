@@ -54,7 +54,6 @@ object GraftStreaming {
       case org.json4s.JObject(fs) => fs.filterNot(_._1 == "_id")
       case other => throw graft.model.GraftException(s"group spec must be an object, got $other")
     }
-    graft.exprs.catalyst.GraftFunctions.register(stream.sparkSession)
     implicit val ec: graft.exprs.ExprCtx =
       graft.exprs.ExprCtx(Some(stream), rootCols = stream.columns.toSeq)
     val aggs = fields.map { case (name, spec) =>
@@ -523,7 +522,6 @@ object Cdc {
       case JObject(fs) => fs
       case other       => throw graft.model.GraftException(s"group spec must be an object, got $other")
     }
-    graft.exprs.catalyst.GraftFunctions.register(deltas.sparkSession)
     implicit val ec: graft.exprs.ExprCtx =
       graft.exprs.ExprCtx(Some(deltas), rootCols = deltas.columns.toSeq.filterNot(_ == signCol))
     val idExpr = fields.collectFirst { case ("_id", v) => v }
@@ -573,7 +571,6 @@ object Cdc {
       case JObject(fs) => fs
       case other       => throw graft.model.GraftException(s"group spec must be an object, got $other")
     }
-    graft.exprs.catalyst.GraftFunctions.register(deltas.sparkSession)
     implicit val ec: graft.exprs.ExprCtx =
       graft.exprs.ExprCtx(Some(deltas), rootCols = deltas.columns.toSeq.filterNot(_ == signCol))
     val idExpr = fields.collectFirst { case ("_id", v) => v }

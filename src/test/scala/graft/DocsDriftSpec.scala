@@ -18,6 +18,10 @@ class DocsDriftSpec extends AnyFunSuite {
       java.nio.charset.StandardCharsets.UTF_8)
   private lazy val coverage = read("COVERAGE.md")
   private lazy val readme = read("README.md")
+  private lazy val mainSources: List[java.nio.file.Path] = {
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally w.close()
+  }
 
   test("stage registry matches the real dispatch (probed, fail-closed)") {
     import spark.implicits._
@@ -101,12 +105,7 @@ class DocsDriftSpec extends AnyFunSuite {
     // a deleted or renamed tool leaves `runMain graft.<Name>` recipes
     // behind that fail only when someone pastes them — collect every
     // top-level object under src/main/scala with its package and diff
-    val srcRoot = java.nio.file.Paths.get("src/main/scala")
-    val files = {
-      val w = java.nio.file.Files.walk(srcRoot)
-      try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally w.close()
-    }
-    val objects = files.flatMap { f =>
+    val objects = mainSources.flatMap { f =>
       val text = read(f.toString)
       val pkg = """(?m)^package\s+([\w.]+)""".r.findFirstMatchIn(text).map(_.group(1) + ".")
         .getOrElse("")
@@ -156,6 +155,23 @@ class DocsDriftSpec extends AnyFunSuite {
     val nope = "SPARK_GRAFT_" + "NOPE"
     assert(envRef.findAllIn(s"set `$nope=1` to").toSeq == Seq(nope) && !isRead(nope))
     assert(isRead("SPARK_GRAFT_CPUS"))
+  }
+
+  test("no main source looks up an implicit session") {
+    // graft reads a session only through the frame it was handed: the
+    // active or default session can be another one in the same JVM (a
+    // newSession() frame, a second caller), whose conf and catalog are not
+    // the frame's
+    val implicitSession = """SparkSession\.active|getActiveSession|getDefaultSession""".r
+    val hits = mainSources.flatMap { f =>
+      read(f.toString).linesIterator.zipWithIndex.collect {
+        case (line, i) if implicitSession.findFirstIn(line).nonEmpty => s"$f:${i + 1}"
+      }
+    }
+    assert(hits.isEmpty, s"implicit session lookups: ${hits.mkString(", ")}")
+    // control: the pattern sees each form
+    assert(Seq("SparkSession.active.conf", "SparkSession.getActiveSession",
+      ".orElse(SparkSession.getDefaultSession)").forall(implicitSession.findFirstIn(_).nonEmpty))
   }
 
   test("every gate query has an oracle and vice versa") {

@@ -353,10 +353,19 @@ class ExprSpec extends AnyFunSuite {
   }
 
   test("native functions resolve over a frame from a second session") {
-    // graft's native functions resolve by name in the registry of the
-    // session that analyzes the plan; each entry point must register them
-    // on its input frame's session, not on the active/default one
+    // graft builds its native functions as Catalyst expressions, not as
+    // registry lookups, and reads parity flags from the input frame's
+    // session: a frame from a second session works while the default one
+    // is active, and graft leaves that session's function catalog alone
     val other = spark.newSession()
+    other.conf.set("graft.parity.avg", "reference")
+    import org.apache.spark.sql.functions.{array, col, lit, split}
+    // the Columns below are built while the default test session is active
+    val text = other.createDataFrame(Seq(("the quick brown fox jumps", "cafe\u0301")))
+      .toDF("t", "c")
+    def one(c: org.apache.spark.sql.Column): Any = text.select(c).head().get(0)
+    def longs(xs: Long*) = array(xs.map(lit): _*)
+    val toks = split(col("t"), " ")
     val docs = other.read.json(other.createDataset(Seq(
       """{"g": "a", "s": "ab12cd345", "v": 3, "sign": 1, "ts": "2024-01-01T10:01:00Z"}""",
       """{"g": "a", "s": "x7", "v": 1, "sign": 1, "ts": "2024-01-01T10:02:00Z"}""",
@@ -367,6 +376,43 @@ class ExprSpec extends AnyFunSuite {
       x.asInstanceOf[scala.collection.Seq[Any]].map(_.toString.toLong).toSeq
     val find = """{"$regexFind": {"input": "$s", "regex": "[0-9]+"}}"""
     val cases: Seq[(String, () => Unit)] = Seq(
+      "TextFunctions.normalizeNfc" -> { () =>
+        assert(one(graft.ext.TextFunctions.normalizeNfc(col("c"))) == "caf\u00e9")
+      },
+      "TextFunctions.linearClassifierScore" -> { () =>
+        val s = one(graft.ext.TextFunctions.linearClassifierScore(col("t"), Seq(0.5, -0.5)))
+        assert(s.asInstanceOf[Double] > 0 && s.asInstanceOf[Double] < 1)
+      },
+      "Kernels.hashedShinglesKernel" -> { () =>
+        assert(nums(one(graft.ext.Kernels.hashedShinglesKernel(3)(col("t")))).length == 3)
+      },
+      "Kernels.minhashSigFromHashes" -> { () =>
+        assert(nums(one(graft.ext.Kernels.minhashSigFromHashes(16, 42L)(longs(1L, 2L)))).length
+          == 16)
+      },
+      "Kernels.bandKeysKernel" -> { () =>
+        assert(nums(one(graft.ext.Kernels.bandKeysKernel(4, 4)(longs(1L to 16L: _*)))).length
+          == 4)
+      },
+      "Kernels.jaccardLongKernel" -> { () =>
+        assert(one(graft.ext.Kernels.jaccardLongKernel(longs(1L, 2L), longs(2L, 3L))) == 1.0 / 3)
+      },
+      "Kernels.spanCutKernel" -> { () =>
+        val r = one(graft.ext.Kernels.spanCutKernel(2)(toks, array(lit(0))))
+        assert(r.asInstanceOf[org.apache.spark.sql.Row].getString(0) == "brown fox jumps")
+      },
+      "Kernels.positionalGramHashKernel" -> { () =>
+        val r = one(graft.ext.Kernels.positionalGramHashKernel(2)(toks))
+        assert(r.asInstanceOf[scala.collection.Seq[_]].length == 4)
+      },
+      "$avg over an all-null group reads graft.parity.avg from the frame's session" -> { () =>
+        val nulls = other.read.json(other.createDataset(Seq(
+          """{"g": "y", "x": 1}""", """{"g": "z", "x": null}"""))(
+          org.apache.spark.sql.Encoders.STRING))
+        val r = Aggo.aggregate(nulls, """[{"$match": {"g": "z"}},
+            {"$group": {"_id": "$g", "a": {"$avg": "$x"}}}]""").collect()
+        assert(r.map(_.get(1)).toSeq == Seq(0.0))
+      },
       "Aggo.aggregate $minN" -> { () =>
         val r = Aggo.aggregate(docs,
           """[{"$group": {"_id": "$g", "lo": {"$minN": {"input": "$v", "n": 2}}}}]""").collect()
@@ -402,6 +448,8 @@ class ExprSpec extends AnyFunSuite {
       scala.util.Try(run()).failed.toOption.map(e => s"$name: ${e.getMessage.take(200)}")
     }
     assert(failed.isEmpty, failed.mkString("\n"))
+    val registered = other.catalog.listFunctions().collect().map(_.name).filter(_.startsWith("graft_"))
+    assert(registered.isEmpty, s"graft wrote to the caller's catalog: ${registered.mkString(", ")}")
   }
 
   test("bit operators and N-variant array expressions") {

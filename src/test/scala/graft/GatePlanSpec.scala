@@ -40,10 +40,20 @@ class GatePlanSpec extends AnyFunSuite {
     case _ => false
   }
 
-  test("no gate query plans an unpartitioned window over raw data") {
+  // Every gate query built once against the sf0.001 tables and shared by
+  // the three sweeps: several builders run eager spills or streaming gates,
+  // and a frame caches its own plans.
+  private lazy val gates: Seq[(String, org.apache.spark.sql.DataFrame)] = {
     val dir = "/root/testdata/sf0.001"
-    val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, build) =>
-      val df = build(spark, dir)
+    val built = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, build) =>
+      name -> build(spark, dir)
+    }
+    assert(built.map(_._1).toSet == SparkEntry.queries.keySet, "gate sweep misses queries")
+    built
+  }
+
+  test("no gate query plans an unpartitioned window over raw data") {
+    val violations = gates.flatMap { case (name, df) =>
       df.queryExecution.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty && !boundedInput(w.child) => name
       }
@@ -60,10 +70,8 @@ class GatePlanSpec extends AnyFunSuite {
     // bounded by construction, the big side is one scan. Fails closed on
     // the physical plan so a regressed join condition (typo'd key, lost
     // equi-predicate) surfaces as a named violation, not a cluster stall.
-    val dir = "/root/testdata/sf0.001"
-    val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, build) =>
-      val plan = build(spark, dir).queryExecution.executedPlan
-      plan.collect {
+    val violations = gates.flatMap { case (name, df) =>
+      df.queryExecution.executedPlan.collect {
         case _: org.apache.spark.sql.execution.joins.CartesianProductExec => name
       }
     }.distinct
@@ -129,9 +137,8 @@ class GatePlanSpec extends AnyFunSuite {
     assert(funnels(spark.range(100000).toDF("id").coalesce(1)
       .queryExecution.executedPlan).nonEmpty,
       "audit failed to flag the raw coalesce(1) control plan")
-    val dir = "/root/testdata/sf0.001"
-    val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, build) =>
-      funnels(build(spark, dir).queryExecution.executedPlan).map(v => s"$name[$v]")
+    val violations = gates.flatMap { case (name, df) =>
+      funnels(df.queryExecution.executedPlan).map(v => s"$name[$v]")
     }.distinct
     assert(violations.isEmpty,
       s"unbounded single-partition funnel in gate queries: ${violations.mkString(", ")}")
