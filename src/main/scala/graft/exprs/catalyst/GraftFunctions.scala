@@ -246,7 +246,6 @@ object GraftFunctions {
   val Int8DotName = "graft_int8_dot"
   val ClassifierSumName = "graft_classifier_sum"
   val WordGramsName = "graft_word_grams"
-  val GramHalvesName = "graft_gram_halves"
   val PositionalGramsName = "graft_positional_grams"
   val SpanCutName = "graft_span_cut"
 
@@ -300,9 +299,6 @@ object GraftFunctions {
   def wordGrams(tokens: Column, k: Int): Column =
     column(WordGramsExpr(expression(tokens), k))
 
-  def gramHalves(tokens: Column, n: Int): Column =
-    column(GramHalvesExpr(expression(tokens), n))
-
   def positionalGrams(tokens: Column, n: Int): Column =
     column(PositionalGramsExpr(expression(tokens), n))
 
@@ -353,7 +349,6 @@ object GraftFunctions {
         case Literal(arr: ArrayData, ArrayType(DoubleType, _)) => arr.toDoubleArray()
       }))
     fn(WordGramsName, 2)(es => wordGrams(c(es(0)), litInt(WordGramsName, es(1))))
-    fn(GramHalvesName, 2)(es => gramHalves(c(es(0)), litInt(GramHalvesName, es(1))))
     fn(PositionalGramsName, 2)(es =>
       positionalGrams(c(es(0)), litInt(PositionalGramsName, es(1))))
     fn(SpanCutName, 3)(es => spanCut(c(es(0)), c(es(1)), litInt(SpanCutName, es(2))))

@@ -110,18 +110,6 @@ object KernelExprs {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** First-seed positional gram fingerprints — see [[GramHalvesExpr]]. */
-  def gramHalves(toks: ArrayData, n: Int): ArrayData = {
-    val T = if (toks == null) 0 else toks.numElements()
-    if (T < n) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
-    val ts = new Array[String](T)
-    var i = 0
-    while (i < T) { ts(i) = toks.getUTF8String(i).toString; i += 1 }
-    val h1s = new Array[Long](T - n + 1)
-    graft.ext.Kernels.positionalGramFold(ts, n, h1s, null)
-    UnsafeArrayData.fromPrimitiveArray(h1s)
-  }
-
   /** 128-bit positional gram fingerprints — see [[PositionalGramsExpr]]. */
   def positionalGrams(toks: ArrayData, n: Int): ArrayData = {
     val T = if (toks == null) 0 else toks.numElements()
@@ -381,36 +369,6 @@ case class JaccardSortedExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** First-seed-ONLY positional gram fingerprints: element `p` is the 64-bit
-  * seed-42 fold of tokens `p..p+n-1` — bit-identical to `_1` of
-  * [[PositionalGramsExpr]]'s struct by shared loop
-  * ([[graft.ext.Kernels.positionalGramFold]] with the second seed off).
-  * The singleton-gram prefilter's phase 1 only ever consumes the 64-bit
-  * half; this skips the second char-hash pass AND the per-gram struct
-  * allocation on the full-corpus gram explode (sf1: ~350M grams). Null or
-  * shorter-than-`n` token arrays yield an empty array. Output is
-  * `UnsafeArrayData.fromPrimitiveArray` — zero per-element boxing. */
-case class GramHalvesExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_gram_halves"
-
-  override def eval(input: InternalRow): Any =
-    KernelExprs.gramHalves(child.eval(input).asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val jt = CodeGenerator.javaType(dataType)
-    ev.copy(
-      code = c.code +
-        code"$jt ${ev.value} = graft.exprs.catalyst.KernelExprs.gramHalves(${c.isNull} ? null : ${c.value}, $n);",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** 128-bit positional word n-gram fingerprints
   * (`array<struct<_1:bigint,_2:bigint>>`, one element per gram start) —
   * the expression form of the r15 `positionalGramHashKernel` ScalaUDF:
@@ -426,7 +384,7 @@ case class PositionalGramsExpr(child: Expression, n: Int) extends UnaryExpressio
     StructField("_2", LongType, nullable = false))), containsNull = true)
   // null token arrays yield an EMPTY gram array (unobservable in the
   // operators — the kernel sits behind a size(__toks) >= n filter — and
-  // consistent with GramHalvesExpr/HashedShinglesExpr null handling)
+  // consistent with HashedShinglesExpr null handling)
   override def nullable: Boolean = false
   override def prettyName: String = "graft_positional_grams"
 

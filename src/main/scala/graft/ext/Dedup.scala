@@ -113,29 +113,6 @@ object Dedup {
     math.max(sess, math.min(4096, (rows / rowsPerPart).toInt + 1))
   }
 
-  /** Arming thresholds for the singleton prefilters (the gram prune in
-    * [[removeDupSpans]], the band-bucket prune in
-    * [[minhashPairsFromSignatures]]'s self-join tier). The prunes trade a
-    * fixed up-front cost — one narrow count shuffle over the key hashes, a
-    * bloom build, and a second run of the explode kernel — for thinning
-    * the wide keyed exchange to its non-singleton fraction. That trade
-    * only pays once the wide exchange is large enough to spill reducer
-    * hash maps and dominate the operator: the r9 record measured the
-    * UNCONDITIONAL prunes 1.6-1.7× the r8 wall at sf0.1 inputs (250k gram
-    * rows / 80k band rows — the whole exchange fits one task wave) while
-    * saving only 4-7% at the 6M-doc sf1 tiers (350M gram / 96M band rows)
-    * where they were designed. The thresholds sit ~an order of magnitude
-    * above the largest input where the prune measurably lost and ~an
-    * order below the smallest tier where it wins (the 1.5M-doc scaling
-    * tier: ~87M gram / 24M band rows), so every scaling-curve tier keeps
-    * the pruned plan and every small-corpus call keeps the direct one.
-    * Both volumes are priced by arithmetic the operators already compute
-    * (`nGramRows`, `docs × bands`) — arming costs no extra scan.
-    *
-    * `var` for the same reason as [[planAuditHook]]: the differential spec
-    * lowers them to 0 to run the pruned plan on a small corpus and assert
-    * it returns bit-identical results to the direct plan. Production code
-    * never writes them. */
   /** [[clusterPairs]]' bounded-graph union-find arm: collect the deduped
     * edge list and solve components on the driver when it holds at most
     * this many edges (~200 MB collected at the default — the bounded
@@ -143,12 +120,9 @@ object Dedup {
     * The dup-graph edge count tracks the corpus's DUPLICATED fraction (the
     * verified pair set), not the corpus, so bench- and sf1-scale graphs
     * sit far under the gate while a genuinely pair-heavy 100-TB graph
-    * keeps the distributed rounds. 0 disables the arm (spec lever — the
-    * differential test runs both arms on the same graph). */
-  private[graft] var ccCollectMaxEdges: Long = 4000000L
-
-  private[graft] var gramPruneMinRows: Long = 16000000L
-  private[graft] var bandPruneMinRows: Long = 8000000L
+    * keeps the distributed rounds. The differential spec passes 0 through
+    * the `collectMaxEdges` overload to run both arms on the same graph. */
+  private[graft] val ccCollectMaxEdges: Long = 4000000L
 
   /** Arming threshold for [[ingestStep]]'s exact-tier batch bloom, in
     * TOTAL ON-DISK BYTES of the store's batch dirs (a free FileSystem
@@ -162,8 +136,11 @@ object Dedup {
     * pruned exchange (~1 GB/batch and growing) clearly out-costs two fixed
     * actions; below it the anti-join runs direct (still against the narrow
     * hash sidecar — the sidecar always pays, it replaces a full text
-    * re-read+re-hash with a 40 B/doc column scan). */
-  private[graft] var exactBloomMinStoreBytes: Long = 8L << 30
+    * re-read+re-hash with a 40 B/doc column scan). The default of the
+    * `exactArmMinStoreBytes` / `hashSidecarMinStoreBytes` arguments of the
+    * ingest, merge, compaction and backfill operators, which callers lower
+    * to arm the sidecars on a small store. */
+  private[graft] val exactBloomMinStoreBytes: Long = 8L << 30
 
   /** Bucket count for [[ingestStep]]'s band-key sidecar layout: every band
     * row carries `bucket = pmod(xxhash64(band, band_key), buckets)` and the
@@ -272,8 +249,8 @@ object Dedup {
   }
 
   /** The ONE recipe for probing a driver-built Bloom filter from a column
-    * of 64-bit hashes — every prefilter (exact-content store bloom, band-
-    * bucket prunes, singleton-gram prune) routes through here, and the
+    * of 64-bit hashes — every prefilter (exact-content store bloom,
+    * bounded-batch band bloom) routes through here, and the
     * literal-vs-broadcast choice is SIZE-gated rather than per-call-site
     * folklore:
     *
@@ -411,11 +388,11 @@ object Dedup {
 
   /** The absolute-cover gate below which coalesced ranges are considered
     * tight (≤ ~a hundred row groups' worth of ids — prunes hugely on any
-    * multi-M store). `var` for the same reason as [[gramPruneMinRows]]:
-    * the differential spec lowers it to 0 to arm the InSet form on a
-    * spec-sized id set (a realistic uniform spread needs >100k candidate
-    * ids, not a unit-test fixture) and assert it returns bit-identical
-    * results with the In predicate in the scan. Production never writes. */
+    * multi-M store). A `var` only so the differential spec can lower it
+    * to 0 to arm the InSet form on a spec-sized id set (a realistic
+    * uniform spread needs >100k candidate ids, not a unit-test fixture)
+    * and assert it returns bit-identical results with the In predicate in
+    * the scan. Production never writes. */
   private[graft] var verifyRangeTightCover: Double = 100000.0
 
   private[graft] def chooseIdPredicate(sorted: Array[Long], maxRanges: Int,
@@ -653,38 +630,6 @@ object Dedup {
       .getOrElse(banded(renamed(right, idAs), idAs))
     def renamed(sigs: DataFrame, idAs: String): DataFrame =
       sigs.select(col("doc_id").as(idAs), col("sig"))
-    // ---- singleton band-bucket prefilter (self-join tier) ----
-    // A (band, band_key) bucket holding a single row cannot produce a
-    // candidate pair, and for a mostly-unique corpus MOST buckets are
-    // singletons — yet the band self-join sorted and shuffled every one of
-    // its docs×bands exploded rows twice (the operator's dominant CPU at
-    // 6M docs). Same recipe as removeDupSpans' singleton-gram prune: a
-    // narrow count over the 64-bit key hash (8 B + count per row,
-    // map-side-combined) finds buckets with >= 2 rows — band is the band
-    // INDEX, so one doc never repeats a (band, band_key); >= 2 rows means
-    // >= 2 distinct docs, i.e. a SUPERSET of pair-producing buckets (hash
-    // collisions only ever widen it) — then a broadcast bloom of the hot
-    // hashes drops singleton rows SCAN-SIDE on both join inputs, before
-    // the wide exchange. Exactness: the join still tests real (band,
-    // band_key) equality and the Jaccard verify re-checks every surviving
-    // pair, so bloom false positives cost work, never answers. Bipartite
-    // callers skip it: their small side (eval set, ingest batch) already
-    // broadcasts under AQE, which prunes the big side's scan to matching
-    // keys for free. Driver state is the bloom (~17 MB at 14M hot keys /
-    // 1% — the 100-TB posture is the same as the gram prune's: hot-key
-    // cardinality scales with the DUPLICATED fraction, not the corpus).
-    //
-    // ADAPTIVE: the prune is a bet — one extra narrow count shuffle plus a
-    // second banding pass, paid up front, against the singleton fraction
-    // of the wide exchange saved. Below [[bandPruneMinRows]] exploded band
-    // rows the wide self-join fits a single reducer wave's hash maps and
-    // the prune's fixed cost dominates (the r9 record measured the
-    // unconditional form 1.6× the r8 wall at an 80k-band-row input while
-    // saving 4% at 96M rows), so small inputs take the direct join and the
-    // prune arms only at volumes where the exchange it thins actually
-    // hurts. The gate is priced by `left.count() * bands` — exact row
-    // arithmetic (the band kernel emits one key per band per doc), no
-    // extra scan of the exploded frame.
     val bandedLeftRaw = banded(renamed(left, leftName), leftName)
     // set only by the leftBoundedPrune branch: the bounded-batch banding
     // explode is pinned there so the bloom aggregation and the band join
@@ -747,27 +692,7 @@ object Dedup {
           (pinned, bandedRightSide(rightName)
             .filter(might(xxhash64(col("band"), col("band_key")))))
         }
-      } else if (!(selfPairs && materializeCandidates) ||
-                 left.count() * bands < bandPruneMinRows) {
-        (bandedLeftRaw, bandedRightSide(rightName))
-      } else {
-        val spark = left.sparkSession
-        val nBandRows = left.count() * bands
-        val keyed = bandedLeftRaw
-          .select(xxhash64(col("band"), col("band_key")).as("__bk"))
-          .repartition(scaledParts(spark, nBandRows), col("__bk"))
-        val hot = phase("mh_hot_bands")(spill(
-          keyed.groupBy(col("__bk")).agg(count(lit(1)).as("__c"))
-            .filter(col("__c") >= 2).select(col("__bk")), "graft-minhash-hotbands"))
-        val nHot = hot.count()
-        if (nHot == 0L) (bandedLeftRaw.limit(0), bandedLeftRaw.limit(0))
-        else {
-          val might = bloomProbe(spark, hot.stat.bloomFilter("__bk", nHot, 0.01))
-          def pruned(idAs: String) = banded(renamed(left, idAs), idAs)
-            .filter(might(xxhash64(col("band"), col("band_key"))))
-          (pruned(leftName), pruned(rightName))
-        }
-      }
+      } else (bandedLeftRaw, bandedRightSide(rightName))
     val cand0 = bandedLeft.join(bandedRight, Seq("band", "band_key"))
     val cand0p = if (selfPairs) cand0.filter(col(leftName) < col(rightName)) else cand0
     // ---- bounded verify fetch (see [[VerifyPrune]]) ----
@@ -2221,7 +2146,7 @@ object Dedup {
     // exact tier: in-batch dedup, then null-safe content-hash anti-join
     // against the store's content hashes. Two O(store)-per-batch costs are
     // bounded here (r11 curated near-ingest profiling), both ADAPTIVE on the
-    // same gate — total store bytes ≥ [[exactBloomMinStoreBytes]], a free
+    // same gate — total store bytes ≥ `exactArmMinStoreBytes`, a free
     // FileSystem listing:
     //  - SCAN: once armed, each ingested batch dir gets a narrow
     //    `content_hash` sidecar under storePath + "_hashes" (written below,
@@ -2597,7 +2522,14 @@ object Dedup {
     * item. O(diameter) rounds; dup clusters have tiny diameters so the
     * frontier collapses after 2-3.
     * Returns (doc_id, cluster) where cluster is the smallest member id. */
-  def clusterPairs(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
+  def clusterPairs(pairs: DataFrame, maxIter: Int = 10): DataFrame =
+    clusterPairs(pairs, maxIter, ccCollectMaxEdges)
+
+  /** [[clusterPairs]] with the union-find arm's edge budget as an argument:
+    * 0 forces the distributed rounds (the differential specs run both arms
+    * on one graph). */
+  private[graft] def clusterPairs(pairs: DataFrame, maxIter: Int,
+                                  collectMaxEdges: Long): DataFrame = {
     // ---- bounded-graph union-find arm (r15 optimization round) ----
     // The distributed rounds price the 100-TB dup graph, but each round is
     // 4-5 shuffles + a lineage-truncation spill + a delta count — ~2 s of
@@ -2607,7 +2539,7 @@ object Dedup {
     // rows; phase-attributed via Dedup.phaseHook). A near-dup graph's
     // edge set is bounded by the VERIFIED pair count — the duplicated
     // fraction of the corpus, orders of magnitude smaller than the corpus
-    // itself — so up to [[ccCollectMaxEdges]] edges (~128 MB of driver
+    // itself — so up to `collectMaxEdges` edges (~128 MB of driver
     // longs at the default, the same bounded-driver-materialization class
     // as the ANN centroids and the verify id-set collect) the component
     // fixpoint is computed in one pass of union-find on the driver:
@@ -2628,7 +2560,7 @@ object Dedup {
     // distributed arm's both-direction edge list derives from the already-
     // deduped half-size frame instead of re-distinct-ing the raw pair set
     var seedOnce: Option[DataFrame] = None
-    if (integral && ccCollectMaxEdges > 0) {
+    if (integral && collectMaxEdges > 0) {
       val edgesOnce = pairs
         .select(col("id_a").as("src"), col("id_b").as("dst"))
         .distinct().persist()
@@ -2638,7 +2570,7 @@ object Dedup {
       // a (gate+1)-th row proves over-gate with the final aggregation's
       // take stopped early instead of counting all of it.
       // clamp before the +1: a gate of Long.MaxValue must not wrap
-      val probeLimit = (math.min(ccCollectMaxEdges, Int.MaxValue - 1L) + 1).toInt
+      val probeLimit = (math.min(collectMaxEdges, Int.MaxValue - 1L) + 1).toInt
       val probe = phase("cc_edges")(
         edgesOnce.select(col("src").cast("long"), col("dst").cast("long"))
           .limit(probeLimit).collect())
@@ -2652,12 +2584,12 @@ object Dedup {
           clusterPairsUnionFind(pairs.sparkSession, probe, idType.get))
         edgesOnce.unpersist()
         System.err.println(s"[graft] clusterPairs: union-find arm " +
-          s"(${probe.length} edges <= $ccCollectMaxEdges gate)")
+          s"(${probe.length} edges <= $collectMaxEdges gate)")
         return out
       }
       seedOnce = Some(edgesOnce)
       System.err.println(s"[graft] clusterPairs: distributed arm " +
-        s"(probe ${if (hasNull) "found null ids" else s"exceeded $ccCollectMaxEdges gate"})")
+        s"(probe ${if (hasNull) "found null ids" else s"exceeded $collectMaxEdges gate"})")
     }
     val once = seedOnce.getOrElse(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
@@ -2893,24 +2825,6 @@ object Dedup {
   // SimHash
   // -------------------------------------------------------------------------
 
-  /** 64-bit SimHash of a token-array column: per-token xxhash64, signed bit
-    * votes accumulated with zip_with, sign → bit reconstruction. Pure
-    * Column expressions; one scan. */
-  def simhash64(tokensCol: Column): Column = {
-    val votes = aggregate(
-      tokensCol,
-      array_repeat(lit(0), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (v, bit) => v + when(call_function("shiftright", h, bit.cast("int")).bitwiseAND(1) === 1, 1).otherwise(-1))
-      })
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(63)),
-        (v, bit) => when(v > 0, call_function("shiftleft", lit(1L), bit.cast("int"))).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
   /** Hamming distance between two 64-bit signatures. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
@@ -3135,38 +3049,8 @@ object Dedup {
     // the spilled token table.
     val nGramRows = base
       .agg(sum(greatest(size(col("__toks")) - (n - 1), lit(0)))).first().getLong(0)
-    // ---- singleton-gram prefilter ----
-    // Only a gram occurring in >= 2 documents can cut anything, and in web
-    // corpora MOST grams occur exactly once — shipping every positional row
-    // (id, pos, 128-bit gram) into the wide __g exchange just for the
-    // min!=max test to discard it made that exchange the operator's
-    // dominant shuffle. Phase 1 counts occurrences of the gram hash's
-    // 64-bit HALF — an 8-byte key and a count, the narrowest possible
-    // shuffle row over the same key space — and keeps halves seen >= 2
-    // times: a SUPERSET of cross-document-hot (within-document repeats and
-    // 64-bit half collisions included; exactness is restored by the
-    // min!=max test below, which sees EVERY positional row of any surviving
-    // half). Phase 2 folds the repeated halves into a bloom filter (shipped
-    // via [[bloomProbe]]'s size-gated literal/broadcast recipe) and
-    // drops singleton positional rows SCAN-SIDE, before the wide exchange —
-    // the exchange then carries only the repeated fraction (+ fpp), and the
-    // hot aggregation + join-back run over that same reduced frame. The
-    // gram kernel runs twice (once per phase), but it char-hashes each
-    // token once per seed and was measured cheap next to the shuffle it
-    // now avoids.
-    //
-    // ADAPTIVE ([[gramPruneMinRows]]): below ~16M gram rows the wide
-    // exchange fits a single task wave and the prefilter's fixed cost
-    // (phase-1 count shuffle + second kernel pass) exceeds what it saves —
-    // the r9 record measured the unconditional form 1.7× the r8 wall at a
-    // 250k-gram input vs a 7% saving at 350M. Small corpora take the
-    // direct single-exchange plan; the gate is priced by `nGramRows`,
-    // already computed above for [[scaledParts]].
-    val grams =
-      if (nGramRows < gramPruneMinRows)
-        positionalGrams(base, idCol, n)
-          .repartition(scaledParts(spark, nGramRows), col("__g"))
-      else pruneSingletonGrams(base, idCol, n, nGramRows)
+    val grams = positionalGrams(base, idCol, n)
+      .repartition(scaledParts(spark, nGramRows), col("__g"))
     // "appears in >= 2 DISTINCT documents" is exactly min(id) != max(id) —
     // two streaming aggregates with full map-side partial combine, where
     // countDistinct would carry a per-gram distinct-id set through the
@@ -3184,39 +3068,6 @@ object Dedup {
     // hand it to the audit hook so the plan-shape spec still sees it
     planAuditHook.foreach(_("dupspans_hits", dupStarts))
     cutCoveredSpans(base, idCol, dupStarts, n)
-  }
-
-  /** Phase 1+2 of [[removeDupSpans]]' singleton-gram prefilter: count the
-    * 64-bit gram-hash halves, bloom the repeated ones, and return the
-    * positional-gram frame thinned to (a superset of) repeated grams,
-    * repartitioned on `__g` for the downstream aggregation + join. An
-    * empty repeated set short-circuits to an empty gram frame (no gram
-    * repeats → nothing can cut). */
-  private def pruneSingletonGrams(base: DataFrame, idCol: String, n: Int,
-                                  nGramRows: Long): DataFrame = {
-    val spark = base.sparkSession
-    // phase 1 consumes ONLY the 64-bit first-seed half: the halves kernel
-    // (r16) computes just that chain — no second char-hash pass, no
-    // per-gram struct, no position column — over the operator's single
-    // largest explode (bit-identical to __g._1 by shared fold core)
-    val halves = base.filter(size(col("__toks")) >= n)
-      .select(explode(Kernels.gramHalvesKernel(n)(col("__toks"))).as("__h"))
-      .repartition(scaledParts(spark, nGramRows), col("__h"))
-    val repHalves = spill(
-      halves.groupBy(col("__h")).agg(count(lit(1)).as("__c"))
-        .filter(col("__c") >= 2),
-      "graft-dupspan-rep")
-    val stats = repHalves.agg(count(lit(1)), sum(col("__c"))).first()
-    val repCount = stats.getLong(0)
-    if (repCount == 0L)
-      // no gram repeats anywhere: nothing can cut — empty gram frame
-      return positionalGrams(base, idCol, n).limit(0)
-    val candRows = stats.getLong(1) // Σ counts of repeated halves = post-filter positional rows
-    val mightRepeat = bloomProbe(spark,
-      repHalves.stat.bloomFilter("__h", repCount, 0.01))
-    positionalGrams(base, idCol, n)
-      .filter(mightRepeat(col("__g").getField("_1")))
-      .repartition(scaledParts(spark, candRows), col("__g"))
   }
 
   /** Positional word n-grams of a `(idCol, __toks)` frame: one row per

@@ -20,9 +20,9 @@ import graft.exprs.catalyst.GraftFunctions
   * directly — the ScalaUDF boundary paid a boxed-element
   * CatalystTypeConverter per call in BOTH directions, which at sf1 was
   * billions of `java.lang.Long` allocations that existed only to cross
-  * into the loop. r16 moved the span-cut tier (positional grams, gram
-  * halves, span cut) to native expressions too: "the inputs materialize
-  * Java strings either way" was true of the HASHING, but the udf boundary
+  * into the loop. r16 moved the span-cut tier (positional grams, span
+  * cut) to native expressions too: "the inputs materialize Java strings
+  * either way" was true of the HASHING, but the udf boundary
   * ALSO paid a boxed Seq wrapper per row plus a Tuple2→struct encoder per
   * gram on the corpus' largest explode, and the span cut's output path
   * round-tripped every surviving document through UTF-16
@@ -240,31 +240,22 @@ object Kernels {
     * Expression-backed since r16 ([[graft.exprs.catalyst.PositionalGramsExpr]]):
     * the r15 ScalaUDF form paid a boxed Seq[String] input conversion plus a
     * Tuple2→struct encoder per GRAM on the operator's hottest pass (sf1:
-    * ~350M grams per phase, and the kernel runs once per prefilter phase). */
+    * ~350M grams). */
   def positionalGramHashKernel(n: Int): Column => Column = GraftFunctions.positionalGrams(_, n)
 
-  /** First-seed-only positional gram fingerprints (`_1` of
-    * [[positionalGramHashKernel]]'s struct, bit-identical by shared loop) —
-    * the singleton-gram prefilter's phase 1 consumes ONLY the 64-bit half,
-    * and computing the struct to throw half of it away cost a second
-    * char-hash pass plus a per-gram struct allocation over the FULL gram
-    * count (the operator's single largest CPU line at sf1). */
-  def gramHalvesKernel(n: Int): Column => Column = GraftFunctions.gramHalves(_, n)
-
   /** The two-seed gram-fingerprint core: per-token char hashes hoisted
-    * once per seed, then one FNV-style fold per position per requested
-    * seed. `h2s == null` skips the second seed entirely (the halves tier).
+    * once per seed, then one FNV-style fold per position per seed.
     * Package-visible so KernelBench and the equivalence specs measure the
     * SAME code the expressions ship. */
   private[graft] def positionalGramFold(ts: Array[String], n: Int,
                                         h1s: Array[Long], h2s: Array[Long]): Unit = {
     val T = ts.length
     val th1 = new Array[Long](T)
-    val th2 = if (h2s == null) null else new Array[Long](T)
+    val th2 = new Array[Long](T)
     var i = 0
     while (i < T) {
       th1(i) = hash64(ts(i), 42L)
-      if (th2 != null) th2(i) = hash64(ts(i), 7L)
+      th2(i) = hash64(ts(i), 7L)
       i += 1
     }
     var p = 0
@@ -273,12 +264,10 @@ object Kernels {
       var j = 0
       while (j < n) { h1 = (h1 ^ th1(p + j)) * 0x100000001B3L; j += 1 }
       h1s(p) = h1
-      if (h2s != null) {
-        var h2 = 0x9E3779B97F4A7C15L
-        j = 0
-        while (j < n) { h2 = (h2 ^ th2(p + j)) * 0xC4CEB9FE1A85EC53L; j += 1 }
-        h2s(p) = h2
-      }
+      var h2 = 0x9E3779B97F4A7C15L
+      j = 0
+      while (j < n) { h2 = (h2 ^ th2(p + j)) * 0xC4CEB9FE1A85EC53L; j += 1 }
+      h2s(p) = h2
       p += 1
     }
   }

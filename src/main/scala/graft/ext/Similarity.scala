@@ -204,22 +204,6 @@ object Similarity {
       .select(g :+ col("pooled") :+ col("weight_total"): _*)
   }
 
-  /** Deterministic pseudo-random hyperplane components, seeded. */
-  private def randUnit(seed: Long, planes: Int, dim: Int): Seq[Seq[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(planes)(Seq.fill(dim)(rnd.nextGaussian()))
-  }
-
-  /** Sign-bucket id from `planes` random hyperplanes: bit i = sign(v·rᵢ).
-    * Same seed ⇒ same buckets on every executor and across jobs. */
-  def hyperplaneBucket(v: Column, planes: Int, dim: Int, seed: Long = 42L): Column = {
-    val hps = randUnit(seed, planes, dim)
-    hps.zipWithIndex.map { case (hp, i) =>
-      val r = array(hp.map(lit): _*)
-      when(dot(v, r) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduceLeft(_ + _)
-  }
-
   /** Exact top-k cosine neighbors for every row of `queries` against
     * `corpus`. Queries are broadcast (they must be small — typically a probe
     * set); the corpus is scanned once. Deterministic ranking: cosine desc,

@@ -516,18 +516,27 @@ final class AdaptiveBatcher(coll: StreamingCollection, targetMs: Long = 100,
   */
 object Cdc {
 
-  def aggregateDeltas(deltas: DataFrame, signCol: String, groupJson: String): DataFrame = {
+  /** The group spec's `_id` expression, its accumulator fields, and the
+    * context both delta aggregations translate them in (every delta
+    * column but the sign). */
+  private def parseGroup(deltas: DataFrame, signCol: String, groupJson: String) = {
     import org.json4s._
     val fields = org.json4s.jackson.JsonMethods.parse(groupJson) match {
       case JObject(fs) => fs
       case other       => throw graft.model.GraftException(s"group spec must be an object, got $other")
     }
-    implicit val ec: graft.exprs.ExprCtx =
-      graft.exprs.ExprCtx(Some(deltas), rootCols = deltas.columns.toSeq.filterNot(_ == signCol))
     val idExpr = fields.collectFirst { case ("_id", v) => v }
       .getOrElse(throw graft.model.GraftException("delta aggregation requires _id"))
+    (idExpr, fields.filterNot(_._1 == "_id"),
+      graft.exprs.ExprCtx(Some(deltas), rootCols = deltas.columns.toSeq.filterNot(_ == signCol)))
+  }
+
+  def aggregateDeltas(deltas: DataFrame, signCol: String, groupJson: String): DataFrame = {
+    import org.json4s._
+    val (idExpr, accFields, ctx) = parseGroup(deltas, signCol, groupJson)
+    implicit val ec: graft.exprs.ExprCtx = ctx
     val sign = col(signCol)
-    val accs = fields.filterNot(_._1 == "_id").map {
+    val accs = accFields.map {
       case (name, JObject(List(("$sum", JInt(i))))) if i == 1 =>
         sum(sign).as(name)
       case (name, JObject(List(("$sum", arg)))) =>
@@ -567,14 +576,8 @@ object Cdc {
     * stateful aggregations are not available in update mode). */
   def multisetDeltas(deltas: DataFrame, signCol: String, groupJson: String): DataFrame = {
     import org.json4s._
-    val fields = org.json4s.jackson.JsonMethods.parse(groupJson) match {
-      case JObject(fs) => fs
-      case other       => throw graft.model.GraftException(s"group spec must be an object, got $other")
-    }
-    implicit val ec: graft.exprs.ExprCtx =
-      graft.exprs.ExprCtx(Some(deltas), rootCols = deltas.columns.toSeq.filterNot(_ == signCol))
-    val idExpr = fields.collectFirst { case ("_id", v) => v }
-      .getOrElse(throw graft.model.GraftException("delta aggregation requires _id"))
+    val (idExpr, accFields, ctx) = parseGroup(deltas, signCol, groupJson)
+    implicit val ec: graft.exprs.ExprCtx = ctx
     val idCol = graft.exprs.ExprTranslator.translate(idExpr).as("_id")
     val sign = col(signCol)
 
@@ -582,7 +585,7 @@ object Cdc {
     val liveGroups = deltas.groupBy(idCol).agg(sum(sign).as("__live"))
       .filter(col("__live") > 0).select(col("_id"))
 
-    val parts: Seq[DataFrame] = fields.filterNot(_._1 == "_id").map {
+    val parts: Seq[DataFrame] = accFields.map {
       case (name, JObject(List((op, arg)))) =>
         val value = graft.exprs.ExprTranslator.translate(arg)
         val ms = deltas.groupBy(idCol, value.as("__v"))

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * between the verify join and CC so the phases attribute honestly:
   *
   *   mh_sig        shingle+minhash signature spill
-  *   mh_hot_bands  singleton-bucket prune count (armed ≥ bandPruneMinRows)
   *   mh_cand       band join + distinct + candidate spill
   *   verify        exact-Jaccard verify join (tool-side spill barrier)
   *   cc_init / cc_round / cc_delta  connected components

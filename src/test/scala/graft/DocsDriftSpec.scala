@@ -174,6 +174,28 @@ class DocsDriftSpec extends AnyFunSuite {
       ".orElse(SparkSession.getDefaultSession)").forall(implicitSession.findFirstIn(_).nonEmpty))
   }
 
+  test("object-level private[graft] vars are exactly the allowlisted hooks and levers") {
+    // a mutable global on a production object is a second knob beside the
+    // operator's own arguments, and one session's write changes every
+    // other session's plans; gates travel as arguments instead. The ones
+    // left are spec levers and test/profiling hooks.
+    val allowed = Set("Dedup.bandSidecarBuckets", "Dedup.verifyRangeTightCover",
+      "Dedup.planAuditHook", "Dedup.lookupAuditHook", "Dedup.phaseHook",
+      "Similarity.planAuditHook")
+    val owner = """(?m)^(?:\w[\w\[\] ]* )?(object|class|trait) (\w+)""".r
+    val global = """(?m)^  private\[graft\] var (\w+)""".r
+    def globals(src: String): Seq[String] = global.findAllMatchIn(src).toSeq.flatMap { m =>
+      owner.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
+        .collect { case o if o.group(1) == "object" => s"${o.group(2)}.${m.group(1)}" }
+    }
+    val found = mainSources.flatMap(f => globals(read(f.toString))).toSet
+    assert(found == allowed, s"new: ${(found -- allowed).toSeq.sorted.mkString(", ")}; " +
+      s"gone (drop from the allowlist): ${(allowed -- found).toSeq.sorted.mkString(", ")}")
+    // control: the pattern sees an object's var and skips a class member's
+    assert(globals("object Knobs {\n  private[graft] var gate: Long = 1L\n}\n" +
+      "final class Holder {\n  private[graft] var n = 0\n}\n") == Seq("Knobs.gate"))
+  }
+
   test("every gate query has an oracle and vice versa") {
     // today's invariant: the correctness gate is oracle-complete — a queries
     // entry without SQL would silently downgrade to a rows-only check

@@ -185,7 +185,7 @@ class ExtSpec extends AnyFunSuite {
     assert(out(4L) == (("tiny", 1L, 0L)))
   }
 
-  test("removeDupSpans passes every document whole when no gram repeats (prefilter early exit)") {
+  test("removeDupSpans passes every document whole when no gram repeats") {
     val docs = fromJsonl(
       """{"doc_id": 1, "text": "alpha beta gamma delta epsilon"}""",
       """{"doc_id": 2, "text": "zeta eta theta iota kappa"}""")
@@ -377,127 +377,125 @@ class ExtSpec extends AnyFunSuite {
   test("ingestStep: content-hash sidecar written per batch, fallback when missing, null semantics kept") {
     // gate lowered to 0 = the ARMED form (sidecar writes + batch bloom) on
     // a tiny store; production arms at exactBloomMinStoreBytes of store
-    val saved = Dedup.exactBloomMinStoreBytes
-    Dedup.exactBloomMinStoreBytes = 0L
-    try {
-      val root = java.nio.file.Files.createTempDirectory("graft-ingest-hash").toString
-      val store = root + "/docs"
-      val shard1 = fromJsonl(
-        """{"doc_id": 1, "text": "alpha beta gamma delta epsilon zeta eta theta"}""",
-        """{"doc_id": 2, "text": null}""")
-      val shard2 = fromJsonl(
-        """{"doc_id": 3, "text": "alpha beta gamma delta epsilon zeta eta theta"}""", // exact dup of 1
-        """{"doc_id": 4, "text": null}""", // null content: <=> must match stored null
-        """{"doc_id": 5, "text": "completely different content with no overlap whatsoever"}""")
-      Dedup.ingestStep(shard1, "doc_id", "text", store, batchTag = Some("s1"))
-      // sidecar dir mirrors the batch dir
-      assert(new java.io.File(s"${store}_hashes/batch-s1").isDirectory,
-        "content-hash sidecar not written")
-      assert(spark.read.parquet(s"${store}_hashes/batch-s1").count() == 2)
-      Dedup.ingestStep(shard2, "doc_id", "text", store, batchTag = Some("s2"))
-      val ids = Dedup.readStore(spark, store).select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(ids == Set(1L, 2L, 5L), s"got $ids")
-      // crash-fallback: delete s1's sidecar; a later batch must still dedup
-      // against s1 (per-dir re-hash of the text column), results identical
-      def rmr(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmr)); f.delete()
-      }
-      rmr(new java.io.File(s"${store}_hashes/batch-s1"))
-      val shard3 = fromJsonl(
-        """{"doc_id": 6, "text": "alpha beta gamma delta epsilon zeta eta theta"}""", // dup of 1 (sidecar-less dir)
-        """{"doc_id": 7, "text": "completely different content with no overlap whatsoever"}""") // dup of 5 (sidecar'd dir)
-      Dedup.ingestStep(shard3, "doc_id", "text", store, batchTag = Some("s3"))
-      val after = Dedup.readStore(spark, store).select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(after == Set(1L, 2L, 5L), s"fallback diverged: $after")
-      // null-content dedup THROUGH the armed bloom: nulls can't probe, so
-      // they must ride around it into the <=> join
-      val shard4 = fromJsonl(
-        """{"doc_id": 8, "text": "alpha beta gamma delta epsilon zeta eta theta"}""", // dup of 1
-        """{"doc_id": 9, "text": null}""", // null content: dup of stored null
-        """{"doc_id": 10, "text": "genuinely novel content appearing in no earlier shard"}""")
-      Dedup.ingestStep(shard4, "doc_id", "text", store, batchTag = Some("s4"))
-      val armed = Dedup.readStore(spark, store).select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(armed == Set(1L, 2L, 5L, 10L), s"armed bloom diverged: $armed")
-      // DISARMED (default gate, tiny store): no sidecar written, dedup
-      // identical — the r10 direct-anti-join shape
-      Dedup.exactBloomMinStoreBytes = saved
-      val store2 = root + "/docs2"
-      Dedup.ingestStep(shard1, "doc_id", "text", store2, batchTag = Some("d1"))
-      assert(!new java.io.File(s"${store2}_hashes/batch-d1").exists(),
-        "sidecar written below the arming gate")
-      Dedup.ingestStep(shard2, "doc_id", "text", store2, batchTag = Some("d2"))
-      val disarmed = Dedup.readStore(spark, store2).select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(disarmed == Set(1L, 2L, 5L), s"disarmed path diverged: $disarmed")
-    } finally Dedup.exactBloomMinStoreBytes = saved
+    val armedGate = 0L
+    val root = java.nio.file.Files.createTempDirectory("graft-ingest-hash").toString
+    val store = root + "/docs"
+    val shard1 = fromJsonl(
+      """{"doc_id": 1, "text": "alpha beta gamma delta epsilon zeta eta theta"}""",
+      """{"doc_id": 2, "text": null}""")
+    val shard2 = fromJsonl(
+      """{"doc_id": 3, "text": "alpha beta gamma delta epsilon zeta eta theta"}""", // exact dup of 1
+      """{"doc_id": 4, "text": null}""", // null content: <=> must match stored null
+      """{"doc_id": 5, "text": "completely different content with no overlap whatsoever"}""")
+    Dedup.ingestStep(shard1, "doc_id", "text", store, batchTag = Some("s1"),
+      exactArmMinStoreBytes = armedGate)
+    // sidecar dir mirrors the batch dir
+    assert(new java.io.File(s"${store}_hashes/batch-s1").isDirectory,
+      "content-hash sidecar not written")
+    assert(spark.read.parquet(s"${store}_hashes/batch-s1").count() == 2)
+    Dedup.ingestStep(shard2, "doc_id", "text", store, batchTag = Some("s2"),
+      exactArmMinStoreBytes = armedGate)
+    val ids = Dedup.readStore(spark, store).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(ids == Set(1L, 2L, 5L), s"got $ids")
+    // crash-fallback: delete s1's sidecar; a later batch must still dedup
+    // against s1 (per-dir re-hash of the text column), results identical
+    def rmr(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rmr)); f.delete()
+    }
+    rmr(new java.io.File(s"${store}_hashes/batch-s1"))
+    val shard3 = fromJsonl(
+      """{"doc_id": 6, "text": "alpha beta gamma delta epsilon zeta eta theta"}""", // dup of 1 (sidecar-less dir)
+      """{"doc_id": 7, "text": "completely different content with no overlap whatsoever"}""") // dup of 5 (sidecar'd dir)
+    Dedup.ingestStep(shard3, "doc_id", "text", store, batchTag = Some("s3"),
+      exactArmMinStoreBytes = armedGate)
+    val after = Dedup.readStore(spark, store).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(after == Set(1L, 2L, 5L), s"fallback diverged: $after")
+    // null-content dedup THROUGH the armed bloom: nulls can't probe, so
+    // they must ride around it into the <=> join
+    val shard4 = fromJsonl(
+      """{"doc_id": 8, "text": "alpha beta gamma delta epsilon zeta eta theta"}""", // dup of 1
+      """{"doc_id": 9, "text": null}""", // null content: dup of stored null
+      """{"doc_id": 10, "text": "genuinely novel content appearing in no earlier shard"}""")
+    Dedup.ingestStep(shard4, "doc_id", "text", store, batchTag = Some("s4"),
+      exactArmMinStoreBytes = armedGate)
+    val armed = Dedup.readStore(spark, store).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(armed == Set(1L, 2L, 5L, 10L), s"armed bloom diverged: $armed")
+    // DISARMED (default gate, tiny store): no sidecar written, dedup
+    // identical — the r10 direct-anti-join shape
+    val store2 = root + "/docs2"
+    Dedup.ingestStep(shard1, "doc_id", "text", store2, batchTag = Some("d1"))
+    assert(!new java.io.File(s"${store2}_hashes/batch-d1").exists(),
+      "sidecar written below the arming gate")
+    Dedup.ingestStep(shard2, "doc_id", "text", store2, batchTag = Some("d2"))
+    val disarmed = Dedup.readStore(spark, store2).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(disarmed == Set(1L, 2L, 5L), s"disarmed path diverged: $disarmed")
   }
 
   test("compactIngestStore: bin-packs docs+sigs+hashes, ingest continues identically") {
-    val saved = Dedup.exactBloomMinStoreBytes
-    Dedup.exactBloomMinStoreBytes = 0L // arm sidecars at spec size
-    try {
-      val root = java.nio.file.Files.createTempDirectory("graft-ingest-compact").toString
-      val shards = Seq(
-        fromJsonl(
-          """{"doc_id": 1, "text": "the quick brown fox jumps over the lazy dog again and again"}""",
-          """{"doc_id": 2, "text": "unrelated words about spark engines and data processing here"}"""),
-        fromJsonl(
-          """{"doc_id": 3, "text": "the quick brown fox jumps over the lazy dog again and again"}""", // exact dup of 1
-          """{"doc_id": 4, "text": "the quick brown fox jumps over the lazy cat again and again"}""", // near-dup of 1
-          """{"doc_id": 5, "text": "brand new sentences never observed anywhere previously at all"}"""))
-      shards.zipWithIndex.foreach { case (sh, i) =>
-        Dedup.ingestStep(sh, "doc_id", "text", s"$root/a", nearThreshold = Some(0.4),
-          batchTag = Some(s"s$i"))
-        Dedup.ingestStep(sh, "doc_id", "text", s"$root/b", nearThreshold = Some(0.4),
-          batchTag = Some(s"s$i"))
-      }
-      Dedup.compactIngestStore(spark, s"$root/a", s"$root/ac", "text")
-      // layout: one batch dir per store, pin copied
-      assert(Dedup.listBatchDirs(spark, s"$root/ac").size == 1)
-      assert(Dedup.listBatchDirs(spark, s"$root/ac_sigs").size == 1)
-      assert(Dedup.listBatchDirs(spark, s"$root/ac_hashes").size == 1)
-      assert(new java.io.File(s"$root/ac_sigs/_params.json").exists(), "sig params pin not copied")
-      // rows preserved exactly
-      assert(Dedup.readStore(spark, s"$root/ac").select("doc_id").collect().map(_.getLong(0)).toSet ==
-        Dedup.readStore(spark, s"$root/b").select("doc_id").collect().map(_.getLong(0)).toSet)
-      // ingest CONTINUES identically against the compacted store
-      val shard3 = fromJsonl(
-        """{"doc_id": 6, "text": "the quick brown fox jumps over the lazy dog again and again"}""", // exact dup of 1
-        """{"doc_id": 7, "text": "brand new sentences never observed anywhere previously today"}""", // near-dup of 5
-        """{"doc_id": 8, "text": "entirely novel eighth document with wholly original content"}""")
+    val armedGate = 0L // arm sidecars at spec size
+    val root = java.nio.file.Files.createTempDirectory("graft-ingest-compact").toString
+    val shards = Seq(
+      fromJsonl(
+        """{"doc_id": 1, "text": "the quick brown fox jumps over the lazy dog again and again"}""",
+        """{"doc_id": 2, "text": "unrelated words about spark engines and data processing here"}"""),
+      fromJsonl(
+        """{"doc_id": 3, "text": "the quick brown fox jumps over the lazy dog again and again"}""", // exact dup of 1
+        """{"doc_id": 4, "text": "the quick brown fox jumps over the lazy cat again and again"}""", // near-dup of 1
+        """{"doc_id": 5, "text": "brand new sentences never observed anywhere previously at all"}"""))
+    shards.zipWithIndex.foreach { case (sh, i) =>
+      Dedup.ingestStep(sh, "doc_id", "text", s"$root/a", nearThreshold = Some(0.4),
+        batchTag = Some(s"s$i"), exactArmMinStoreBytes = armedGate)
+      Dedup.ingestStep(sh, "doc_id", "text", s"$root/b", nearThreshold = Some(0.4),
+        batchTag = Some(s"s$i"), exactArmMinStoreBytes = armedGate)
+    }
+    Dedup.compactIngestStore(spark, s"$root/a", s"$root/ac", "text",
+      hashSidecarMinStoreBytes = armedGate)
+    // layout: one batch dir per store, pin copied
+    assert(Dedup.listBatchDirs(spark, s"$root/ac").size == 1)
+    assert(Dedup.listBatchDirs(spark, s"$root/ac_sigs").size == 1)
+    assert(Dedup.listBatchDirs(spark, s"$root/ac_hashes").size == 1)
+    assert(new java.io.File(s"$root/ac_sigs/_params.json").exists(), "sig params pin not copied")
+    // rows preserved exactly
+    assert(Dedup.readStore(spark, s"$root/ac").select("doc_id").collect().map(_.getLong(0)).toSet ==
+      Dedup.readStore(spark, s"$root/b").select("doc_id").collect().map(_.getLong(0)).toSet)
+    // ingest CONTINUES identically against the compacted store
+    val shard3 = fromJsonl(
+      """{"doc_id": 6, "text": "the quick brown fox jumps over the lazy dog again and again"}""", // exact dup of 1
+      """{"doc_id": 7, "text": "brand new sentences never observed anywhere previously today"}""", // near-dup of 5
+      """{"doc_id": 8, "text": "entirely novel eighth document with wholly original content"}""")
+    Dedup.ingestStep(shard3, "doc_id", "text", s"$root/ac", nearThreshold = Some(0.4),
+      batchTag = Some("s2"), exactArmMinStoreBytes = armedGate)
+    Dedup.ingestStep(shard3, "doc_id", "text", s"$root/b", nearThreshold = Some(0.4),
+      batchTag = Some("s2"), exactArmMinStoreBytes = armedGate)
+    val a = Dedup.readStore(spark, s"$root/ac").select("doc_id").collect().map(_.getLong(0)).toSet
+    val b = Dedup.readStore(spark, s"$root/b").select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(a == b, s"post-compaction ingest diverged: $a vs $b")
+    assert(Dedup.readStore(spark, s"$root/ac_sigs").count() ==
+      Dedup.readStore(spark, s"$root/b_sigs").count())
+    // param drift against the compacted store still refuses
+    intercept[graft.model.ValidationError] {
       Dedup.ingestStep(shard3, "doc_id", "text", s"$root/ac", nearThreshold = Some(0.4),
-        batchTag = Some("s2"))
-      Dedup.ingestStep(shard3, "doc_id", "text", s"$root/b", nearThreshold = Some(0.4),
-        batchTag = Some("s2"))
-      val a = Dedup.readStore(spark, s"$root/ac").select("doc_id").collect().map(_.getLong(0)).toSet
-      val b = Dedup.readStore(spark, s"$root/b").select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(a == b, s"post-compaction ingest diverged: $a vs $b")
-      assert(Dedup.readStore(spark, s"$root/ac_sigs").count() ==
-        Dedup.readStore(spark, s"$root/b_sigs").count())
-      // param drift against the compacted store still refuses
-      intercept[graft.model.ValidationError] {
-        Dedup.ingestStep(shard3, "doc_id", "text", s"$root/ac", nearThreshold = Some(0.4),
-          shingleSize = 5, batchTag = Some("s3"))
-      }
-      // nested/overlapping outPath refuses
-      intercept[IllegalArgumentException] {
-        Dedup.compactIngestStore(spark, s"$root/ac", s"$root/ac", "text")
-      }
-      // DERIVED-root collisions refuse too — compaction wipes outPath,
-      // outPath_sigs and outPath_hashes before reading, so any overlap
-      // between those and the source's three roots deletes source data:
-      // out doc root == source sig root
-      intercept[IllegalArgumentException] {
-        Dedup.compactIngestStore(spark, s"$root/ac", s"$root/ac_sigs", "text")
-      }
-      // out sig root == source doc root (outPath + "_sigs" == path)
-      intercept[IllegalArgumentException] {
-        Dedup.compactIngestStore(spark, s"$root/x_sigs", s"$root/x", "text")
-      }
-      // scheme alias of the same location must not slip past the check
-      intercept[IllegalArgumentException] {
-        Dedup.compactIngestStore(spark, s"$root/ac", s"file:$root/ac", "text")
-      }
-    } finally Dedup.exactBloomMinStoreBytes = saved
+        shingleSize = 5, batchTag = Some("s3"), exactArmMinStoreBytes = armedGate)
+    }
+    // nested/overlapping outPath refuses
+    intercept[IllegalArgumentException] {
+      Dedup.compactIngestStore(spark, s"$root/ac", s"$root/ac", "text")
+    }
+    // DERIVED-root collisions refuse too — compaction wipes outPath,
+    // outPath_sigs and outPath_hashes before reading, so any overlap
+    // between those and the source's three roots deletes source data:
+    // out doc root == source sig root
+    intercept[IllegalArgumentException] {
+      Dedup.compactIngestStore(spark, s"$root/ac", s"$root/ac_sigs", "text")
+    }
+    // out sig root == source doc root (outPath + "_sigs" == path)
+    intercept[IllegalArgumentException] {
+      Dedup.compactIngestStore(spark, s"$root/x_sigs", s"$root/x", "text")
+    }
+    // scheme alias of the same location must not slip past the check
+    intercept[IllegalArgumentException] {
+      Dedup.compactIngestStore(spark, s"$root/ac", s"file:$root/ac", "text")
+    }
   }
 
   test("ingestStep: partial hash sidecar (no _SUCCESS) falls back to re-hashing that dir") {
@@ -1620,18 +1618,15 @@ class ExtSpec extends AnyFunSuite {
         // and the distributed min-propagation rounds (gate lowered to 0)
         // must label identically — per-component minimum ids.
         for (gate <- Seq(Dedup.ccCollectMaxEdges, 0L)) {
-          val prior = Dedup.ccCollectMaxEdges
-          Dedup.ccCollectMaxEdges = gate
-          try {
-            val got = Dedup.clusterPairs(
-                edges.map { case (a, b) => (a, b, 0.9) }.toDF("id_a", "id_b", "jaccard"))
-              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-            assert(got.keySet == touched, s"seed=$seed gate=$gate: node coverage differs")
-            touched.foreach { v =>
-              assert(got(v) == find(v.toInt).toLong, s"seed=$seed gate=$gate node=$v: " +
-                s"cluster ${got(v)} vs union-find ${find(v.toInt)}")
-            }
-          } finally Dedup.ccCollectMaxEdges = prior
+          val got = Dedup.clusterPairs(
+              edges.map { case (a, b) => (a, b, 0.9) }.toDF("id_a", "id_b", "jaccard"),
+              10, gate)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          assert(got.keySet == touched, s"seed=$seed gate=$gate: node coverage differs")
+          touched.foreach { v =>
+            assert(got(v) == find(v.toInt).toLong, s"seed=$seed gate=$gate node=$v: " +
+              s"cluster ${got(v)} vs union-find ${find(v.toInt)}")
+          }
         }
       }
     }
@@ -1649,14 +1644,10 @@ class ExtSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id_a", org.apache.spark.sql.types.LongType, nullable = true),
         org.apache.spark.sql.types.StructField("id_b", org.apache.spark.sql.types.LongType, nullable = true))))
-    def run(gate: Long): Set[(Option[Long], Option[Long])] = {
-      val prior = Dedup.ccCollectMaxEdges
-      Dedup.ccCollectMaxEdges = gate
-      try Dedup.clusterPairs(df).collect()
+    def run(gate: Long): Set[(Option[Long], Option[Long])] =
+      Dedup.clusterPairs(df, 10, gate).collect()
         .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
           if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet
-      finally Dedup.ccCollectMaxEdges = prior
-    }
     val withGate = run(Dedup.ccCollectMaxEdges)
     val distributed = run(0L)
     assert(withGate == distributed,
@@ -1672,13 +1663,11 @@ class ExtSpec extends AnyFunSuite {
     val pairs = Seq((1L, 2L, 0.9), (2L, 3L, 0.9), (7L, 8L, 0.9), (9L, 7L, 0.9))
       .toDF("id_a", "id_b", "jaccard")
     def run(gate: Long): (Set[(Long, Long)], Set[String]) = {
-      val prior = Dedup.ccCollectMaxEdges
       val fired = scala.collection.mutable.Set[String]()
-      Dedup.ccCollectMaxEdges = gate
       Dedup.phaseHook = Some((n, _) => { fired += n; () })
-      try (Dedup.clusterPairs(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toSet,
-        fired.toSet)
-      finally { Dedup.ccCollectMaxEdges = prior; Dedup.phaseHook = None }
+      try (Dedup.clusterPairs(pairs, 10, gate).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSet, fired.toSet)
+      finally Dedup.phaseHook = None
     }
     val (maxGate, maxPhases) = run(Long.MaxValue)
     val (distributed, distPhases) = run(0L)
@@ -2148,31 +2137,6 @@ class ExtSpec extends AnyFunSuite {
       .select(col("vec_id").cast("int").as("vec_id"), col("embedding"))
     intercept[graft.model.ValidationError] {
       Similarity.pqTopK(intQueries, idx, "vec_id", "embedding", k = 3, rerank = 10)
-    }
-  }
-
-  test("singleton prefilters: pruned plans return bit-identical results to direct plans") {
-    // the adaptive gates route small corpora to the direct single-exchange
-    // plans; force the PRUNED plans on the same small corpus and assert
-    // exact equality — the prune must never change an answer, only cost
-    val docsBig = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def spans(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("cleaned_text"),
-        r.getAs[Long]("n_removed"))).toSet
-    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    val directSpans = spans(Dedup.removeDupSpans(docsBig, "doc_id", "text", n = 4))
-    val directPairs = pairs(Dedup.minhashLshPairs(docsBig, "doc_id", "text", threshold = 0.4))
-    val (g0, b0) = (Dedup.gramPruneMinRows, Dedup.bandPruneMinRows)
-    try {
-      Dedup.gramPruneMinRows = 0L
-      Dedup.bandPruneMinRows = 0L
-      assert(spans(Dedup.removeDupSpans(docsBig, "doc_id", "text", n = 4)) == directSpans)
-      assert(pairs(Dedup.minhashLshPairs(docsBig, "doc_id", "text", threshold = 0.4))
-        == directPairs)
-    } finally {
-      Dedup.gramPruneMinRows = g0
-      Dedup.bandPruneMinRows = b0
     }
   }
 
